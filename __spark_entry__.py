@@ -26,10 +26,12 @@ hash functions / Arrow UDF plumbing) and get the driver's rows-only check:
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 import uuid
 from collections.abc import Callable
+from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -628,383 +630,55 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # The external correctness harness grades the FIRST ~50 dict entries per
-# round. Rounds 1-7 graded every declared query at least once: the union
-# over CORRECTNESS_r01-r07 is 291/291 green, so the old rotation contract
-# ("never-graded queries lead") is exhausted. ROUND-8 CONTRACT
-# (stale-regrade, tests/test_harness_contract.py): the graded window now
-# leads with _REGRADE_FIRST — queries whose IMPLEMENTATION (operator code,
-# fixture, or oracle) changed since their last green row, so their old
-# rows no longer certify HEAD — then fills oldest-green-first (round-2
-# rows are six rounds of code drift old). Driver rows stay honest against
-# drift; every slot re-certifies the stalest evidence. Do NOT rotate
-# mid-round: the gate runs on end-of-round state.
+# round (contract: tests/test_harness_contract.py). The window leads with
+# _REGRADE_FIRST — queries whose IMPLEMENTATION (operator code, fixture,
+# or oracle) changed since their last green row, so their old rows no
+# longer certify HEAD — then fills stalest-green-first. That tail is
+# DERIVED at import from the CORRECTNESS_r*.json files next to this
+# module (_stalest_green_first), so a new round's file re-rotates the
+# window by itself; only _REGRADE_FIRST is edited by hand.
 
-#: queries whose implementation changed THIS round after their last green
+#: queries whose implementation changed after their last green
 #: CORRECTNESS row — maintained by hand with each code change; the
 #: contract test pins these to the front of the graded window.
 _REGRADE_FIRST = [
-    # round 13 (optimization round): queries whose implementation
-    # changed this round after their last green CORRECTNESS row are
-    # prepended here as the changes land (contract: changed queries
-    # open the graded window).
-    # gated_exact_dedup reorder (digest window before the gates —
-    # value-identical, plan changed):
-    "q_pipe_curate",
-    "q_pipe_curate_lsh",
-    "q_st5_stream_curate_gate",
-    # kcore: survivor-set semi-joins now broadcast (edges never shuffle):
-    "q_g3_kcore",
-    # semdedup: cluster-partitioned checkpoint (checkpoint_partitioned):
-    "q_n38_semdedup",
-    # model_curate: gopher gate fanned out behind a Generate guard:
-    "q_pipe_model_curate",
-    "q_st12_stream_model_gate",
-    # text_knn: collected query vector + fused dot/norm aggregate:
-    "q_n59_text_knn",
-]
-
-_DRIVER_PRIORITY = [
-    *_REGRADE_FIRST,
-    # --- round-13 rotation: stalest-green-first, regenerated from
-    # CORRECTNESS_r01..r12 (script pattern in ROTATION_r13_plan.md;
-    # same green rule as tests/test_harness_contract.py). All 334
-    # declared queries have at least one green row; the window is
-    # the stalest tail (round 5 onward). Full surface, no dupes. ---
-    # --- last green: round 5 (30 queries) ---
-    "q_n33_cluster_histogram",
-    "q_mm11_png_decode",
-    "q_mm12_gif_decode",
-    "q_n44_repetition_runs",
-    "q_n46_cluster_representatives",
-    "q_n8g_ann_ivfpq",
-    "q_v7_random_projection",
-    "q_a9_countmin",
-    "q_a10_join_size_estimate",
-    "q_st16_stream_countmin",
-    "q_x19_recursive_cte",
-    "q_x20_pareto_frontier",
-    "q_x21_python_udtf",
-    "q_d1_snapshot_diff",
-    "q_d2_profile_table",
-    "q_d3_table_digest",
-    "q_d4_group_outliers",
-    "q_z1_zorder_key",
-    "q_w2_compact_small_files",
-    "q_w3_partitioned_prune",
-    "q_f1_csv_roundtrip",
-    "q_f2_json_roundtrip",
-    "q_f3_orc_roundtrip",
-    "q_sk1_salted_rollup",
-    "q_rj_range_join",
-    "q_x1_set_except",
-    "q_x2_semi_anti_join",
-    "q_x6_group_median",
-    "q_p3_pivot_counts",
-    "q_x3_scalar_functions",
-    # --- last green: round 6 (42 queries) ---
-    "q_ml4_grouped_fit",
-    "q_ml5_chi2_tokens",
-    "q_ml6_ttest",
-    "q_ml7_autocorr",
-    "q_mm13_jpeg_decode",
-    "q_mm14_decode_quarantine",
-    "q_mm15_animated_frames",
-    "q_mm16_ulaw_decode",
-    "q_f8_warc_ingest",
-    "q_f9_zip_ingest",
-    "q_f10_warc_gz_ingest",
-    "q_pipe_entity_resolution",
-    "q_se7_scd2_build",
-    "q_se8_scd2_temporal_join",
-    "q_n48_prefix_filter_join",
-    "q_n50_pmi_bigrams",
-    "q_n51_winnowing",
-    "q_n52_edit_distance",
-    "q_d8_cascade_delete",
-    "q_d9_source_overlap",
-    "q_d11_join_advisor",
-    "q_d12_k_anonymity",
-    "q_d13_corpus_card",
-    "q_st17_stream_decode_census",
-    "q_st18_stream_compact_gc",
-    "q_sk2_salted_join",
-    "q_v8_centroid_similarity",
-    "q_v9_cosine_histogram",
-    "q_w7_incremental_view",
-    "q_a12_bloom_fpr",
-    "q_x22_rendezvous_shard",
-    "q_x23_quantile_normalize",
-    "q_x24_json_extract",
-    "q_x25_moving_average",
-    "q_x26_market_basket",
-    "q_x27_grouping_sets",
-    "q_x28_percent_rank",
-    "q_p4_unpivot",
-    "q_x4_window_rank",
-    "q_x5_rollup",
-    "q_sql_q13_custdist",
-    "q_sql_q15_top_supplier",
-    # --- last green: round 7 (40 queries) ---
-    "q_s11_sstable_counter_cells",
-    "q_s12_sstable_gen_mc",
-    "q_s13_sstable_compressed",
-    "q_s14_sstable_partition_delete",
-    "q_s15_sstable_bloom_lookup",
-    "q_s17_sstable_stats_census",
-    "q_s18_digest_verify",
-    "q_ml8_cusum_drift",
-    "q_mm17_image_dhash",
-    "q_mm18_pcm_decimate",
-    "q_mm19_image_resize",
-    "q_n53_distinct_ngrams",
-    "q_n54_dsir_weights",
-    "q_x29_token_budget",
-    "q_x30_budget_sample_apply",
-    "q_v10_int8_quantization",
-    "q_se9_attribution",
-    "q_se10_hazard_table",
-    "q_st19_stream_ttl_debt",
-    "q_st20_stream_digest_monitor",
-    "q_g4_trade_components",
-    "q_f11_tar_ingest",
-    "q_sql_q2_min_cost_supplier",
-    "q_sql_q7_nation_volume",
-    "q_sql_q8_market_share",
-    "q_sql_q9_product_profit",
-    "q_sql_q11_important_stock",
-    "q_sql_q12_shipmode_priority",
-    "q_sql_q16_supplier_diversity",
-    "q_sql_q17_small_quantity",
-    "q_sql_q19_disjunctive",
-    "q_sql_q20_part_promotion",
-    "q_sql_q21_waiting_suppliers",
-    "q_sql_q22_sales_opportunity",
-    "q_t6_compact_gc",
-    "q_t7_expire_compact",
-    "q_n47_pps_sample",
-    "q_ml1_linear_fit",
-    "q_ml2_ridge_fit",
-    "q_ml3_residual_outliers",
-    # --- last green: round 8 (44 queries) ---
-    "q_m8_cli_native_job",
-    "q_s20_scrub_report",
-    "q_s19_clustering_slice",
-    "q_n49_span_removal",
-    "q_t11_stcs_plan",
-    "q_t12_twcs_plan",
-    "q_s23_replica_repair",
-    "q_s24_droppable_census",
-    "q_s1_source_count",
-    "q_s2_full_scan",
-    "q_s3_range_scan",
-    "q_s3b_token_range",
-    "q_s3c_portable_token_range",
-    "q_s4_point_lookup",
-    "q_s5_successor",
-    "q_s6_named_columns",
-    "q_s6b_projection",
-    "q_t1_strip_ttl",
-    "q_t1b_live_roundtrip",
-    "q_t1c_strip_nested_cells",
-    "q_t2_cell_kind",
-    "q_t3_interval_pairing",
-    "q_t4_empty_partition_routing",
-    "q_rt_range_tombstone_apply",
-    "q_t5_sort_within_partition",
-    "q_t6_liveness_census",
-    "q_a1_exact_key_count",
-    "q_a2_approx_distinct",
-    "q_a4_sketch_union_distinct",
-    "q_a3_merge_gain",
-    "q_a3b_multi_source_merge_gain",
-    "q_m1_ddl_schema",
-    "q_m2_registry_lookup",
-    "q_m7_cli_option_matrix",
-    "q_m3_strategy_registry",
-    "q_w1_sorted_write_roundtrip",
-    "q_p2_cube_rollup",
-    "q_p1_pricing_rollup",
-    "q_sql_parity",
-    "q_sql_q3_shipping_priority",
-    "q_sql_q5_local_supplier_volume",
-    "q_sql_q6_forecast_revenue",
-    "q_sql_q10_returned_items",
-    "q_x7_window_analytics",
-    # --- last green: round 9 (40 queries) ---
-    "q_n45_bpe_train",
-    "q_t9_sstable_merge_compact",
-    "q_t8_sstable_compact_e2e",
-    "q_s22_merge_retains_deletions",
-    "q_t10_major_compact_rewrite",
-    "q_s25_gc_single_table",
-    "q_s10_sstable_write_roundtrip",
-    "q_s21_strip_rewrite_zeroshuffle",
-    "q_s16_sstable_summary_range",
-    "q_s26_successor_native",
-    "q_m9_index_table_lookup",
-    "q_s27_summary_resample",
-    "q_n57_bm25_topk",
-    "q_n58_hashed_tfidf",
-    "q_n60_rocchio_confusion",
-    "q_x8_json_extract",
-    "q_x9_correlated_subquery",
-    "q_x10_unpivot",
-    "q_p4_grouping_sets",
-    "q_a5_frequent_items",
-    "q_x11_set_intersect",
-    "q_x12_calendar_rollup",
-    "q_n34_length_histogram",
-    "q_n35_source_dup_census",
-    "q_n36_cluster_safe_split",
-    "q_j1_broadcast_join_rollup",
-    "q_j2_shuffle_join_rollup",
-    "q_aj_asof_join",
-    "q_x13_array_functions",
-    "q_st1_stream_strip",
-    "q_st2_stream_dedup",
-    "q_st3_stream_expiring_window",
-    "q_st4_stream_sessions",
-    "q_st6_stream_dedup_vs_corpus",
-    "q_st7_stream_file_sink",
-    "q_st8_stream_upsert",
-    # --- last green: round 10 (45 queries) ---
-    "q_n61_logreg_train",
-    "q_n62_classifier_auc",
-    "q_n63_holdout_auc",
-    "q_n65_sliced_auc",
-    "q_n67_calibration",
-    "q_n56_gopher_rules",
-    "q_n66_temperature_mix",
+    # one n-gram LM scoring kernel for the four smoothing schemes, its
+    # shared oracle CTE builders, and stream_lm_gate's name dispatch:
     "q_n68_lm_perplexity",
     "q_n69_lm_ppl_buckets",
     "q_n70_lm_domain_report",
     "q_n71_sbo_perplexity",
     "q_n72_quality_signals",
     "q_n73_lm_domain_matrix",
-    "q_st9_stream_apply_changes",
-    "q_st10_stream_liveness_census",
-    "q_st11_stream_interval_join",
-    "q_mm1_media_metadata",
-    "q_mm2_media_features",
-    "q_mm3_audio_chunks",
-    "q_mm4_frame_sample",
-    "q_mm5_patch_grid",
-    "q_mm6_wav_decode",
-    "q_v1_group_centroids",
-    "q_v2_nearest_centroid",
-    "q_v3_kmeans_2iter",
-    "q_v4_embedding_norms",
-    "q_se1_sessionize",
-    "q_se2_session_stats",
-    "q_se3_funnel",
-    "q_se4_retention_cohorts",
-    "q_c1_compact_runs",
-    "q_c2_apply_changes",
-    "q_n1_dedup_last_writer",
-    "q_n2_dedup_exact_docs",
-    "q_n3_ngram_jaccard_pairs",
-    "q_n4_simhash",
-    "q_n5_simhash_neardup",
-    "q_n6_embedding_neardup",
-    "q_n6b_embedding_neardup_lsh",
-    "q_n7_topk_similarity",
-    "q_n8_ann_lsh",
-    "q_n8b_ann_ivf",
-    "q_n9_minhash_recall",
-    # --- last green: round 11 (43 queries) ---
-    "q_ml10_theil_sen",
+    "q_n74_doremi_weights",
+    "q_n76_kn_perplexity",
+    "q_n78_mkn_perplexity",
+    "q_pipe_doremi_mix",
     "q_st22_stream_lm_gate",
     "q_st23_stream_sbo_gate",
-    "q_d7_ks_drift",
-    "q_d10_key_skew",
-    "q_ml9_mannwhitney",
-    "q_n17_quality_cutoff",
-    "q_n17b_quality_cutoff_approx",
-    "q_n64_margin_cutoff",
-    "q_se6_peak_concurrency",
-    "q_n76_kn_perplexity",
-    "q_n10_lang_id",
-    "q_n11_quality_score",
-    "q_n12_token_counts",
-    "q_n13_fingerprint",
-    "q_n14_neardup_components",
-    "q_n37_substring_dup_census",
-    "q_n15_decontaminate",
-    "q_n15b_decontaminate_bloom",
-    "q_mm8_ppm_decode",
-    "q_s7_sstable_scan",
-    "q_s8_sstable_strip",
-    "q_s9_sstable_range_lookup",
-    "q_mm9_frame_energy",
-    "q_st15_stream_sstable_strip",
-    "q_mm10_pbm_decode",
-    "q_a8_sketch_difference",
-    "q_n43_ngram_novelty",
-    "q_sql_q4_priority_exists",
-    "q_sql_q14_promo_revenue",
-    "q_x18_approx_percentile",
-    "q_n8e_ann_pq",
-    "q_n8f_ann_pq_materialized",
-    "q_w4_bucketed_colocated_join",
-    "q_st12_stream_enrich",
-    "q_n39_deterministic_shuffle",
-    "q_f4_schema_evolution",
-    "q_g1_pagerank",
-    "q_st13_stream_custom_state",
-    "q_x14_pandas_udaf",
-    "q_g2_triangles",
-    # --- last green: round 12 (50 queries) ---
-    "q_pipe_doremi_mix",
-    "q_n74_doremi_weights",
-    "q_n24_sample_per_group",
-    "q_n75_tokenizer_fertility",
-    "q_n8h_ann_ivf_delete",
-    "q_n8c_ann_ivf_materialized",
-    "q_n8d_ann_ivf_append",
-    "q_st21_stream_ivf_ingest",
-    "q_n77_line_dedup",
-    "q_n78_mkn_perplexity",
-    "q_pipe_anneal_mix",
     "q_st24_stream_mkn_gate",
-    "q_n79_epoch_mix",
-    "q_n80_boilerplate_report",
-    "q_n40_hard_negatives",
-    "q_x15_hopping_window",
-    "q_x16_exact_correlation",
-    "q_a6_sketch_intersection",
-    "q_n41_equidepth_histogram",
-    "q_st14_stream_sliding_window",
-    "q_f5_text_lines_roundtrip",
-    "q_j3_shuffle_hash_join_rollup",
-    "q_v5_gram_matrix",
-    "q_se5_transition_matrix",
-    "q_d5_referential_integrity",
-    "q_j4_broadcast_nested_loop",
-    "q_n42_bpe_segment",
-    "q_mm7_pgm_decode",
-    "q_w5_time_travel",
-    "q_a7_range_distinct",
-    "q_d6_distribution_drift",
-    "q_x17_lateral_posexplode",
-    "q_sql_q18_large_orders",
-    "q_v6_power_iteration",
-    "q_n16_mix_decisions",
-    "q_n16b_mix_report",
-    "q_n18_normalize_text",
-    "q_n19_sample_fixed",
-    "q_n20_pack_sequences",
-    "q_n21_repetition_ratio",
-    "q_n22_scrub_pii",
-    "q_n23_vocab_topk",
-    "q_n25_unigram_quality",
-    "q_n26_tfidf_topk",
-    "q_n27_chunk_sliding",
-    "q_n28_hash_split",
-    "q_n29_dedup_vs_corpus",
-    "q_n30_containment_pairs",
-    "q_n31_bigram_quality",
-    "q_n32_keyword_search",
+    # gated_exact_dedup's gate built with the Column API:
+    "q_pipe_curate",
+    "q_pipe_curate_lsh",
+    "q_st5_stream_curate_gate",
 ]
+
+
+def _stalest_green_first(declared: list[str]) -> list[str]:
+    """``declared`` ordered by the round of each query's latest green
+    CORRECTNESS row, stalest first (never green: first of all); ties keep
+    declaration order. Green means hash-proven, or a rows-only row (no
+    hash recorded) that matched without error; an explicit hash mismatch
+    is red. With no CORRECTNESS files this is declaration order."""
+    last: dict[str, int] = {}
+    for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            hashed = row.get("hash_match")
+            if hashed or (hashed is None and row.get("rows_match")
+                          and row.get("err") is None):
+                last[name] = max(last.get(name, 0), rnd)
+    return sorted(declared, key=lambda name: last.get(name, 0))
 
 
 def _driver_order(d: dict) -> dict:
@@ -1016,6 +690,10 @@ def _driver_order(d: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _driver_order(_declared_queries())
+
+
+def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
     # ---- S: sources / scans / lookups (SURVEY §2.1 S1-S6) ----
@@ -6230,7 +5908,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return text.bigram_freq_quality(scan_table(spark, sf, "documents"))
     q["q_n31_bigram_quality"] = q_n31
 
-    return _driver_order(q)
+    return q
+
+
+#: the graded-window order: _REGRADE_FIRST, then every other declared
+#: query stalest-green-first
+_DRIVER_PRIORITY = [
+    *_REGRADE_FIRST,
+    *(k for k in _stalest_green_first(list(_declared_queries()))
+      if k not in _REGRADE_FIRST),
+]
 
 
 # ---------------------------------------------------------------------------
