@@ -2,6 +2,7 @@
 the kept set is exactly the per-stage intersection."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from cassandra_ttl_remover_spark.operators import curate, dedup, text
 
@@ -938,13 +939,18 @@ def test_kn_unscorable_docs_and_empty_model(spark):
     assert out2[0].sum_invp == 0
 
 
-def test_kn_oracle_parity_inline(spark, documents):
+@pytest.mark.parametrize("scheme", ["lm", "sbo", "kn", "mkn"])
+def test_lm_oracle_parity_inline(spark, documents, scheme):
+    """Each smoothing scheme's perplexity hash-matches its own DuckDB
+    oracle (add-1, stupid backoff, KN, modified KN)."""
     from tests.conftest import SF_DIR
-    from tests.oracle_parity import duck_connection, compare
+    from tests.oracle_parity import compare, duck_connection
 
+    scorer = getattr(curate, f"{scheme}_perplexity")
+    oracle = getattr(curate, f"{scheme}_perplexity_oracle_sql")
     ok, msg = compare(
-        curate.kn_perplexity(documents, "lang = 'en'").orderBy("doc_id"),
-        curate.kn_perplexity_oracle_sql(train_where="lang = 'en'"),
+        scorer(documents, "lang = 'en'").orderBy("doc_id"),
+        oracle(train_where="lang = 'en'"),
         duck_connection(SF_DIR))
     assert ok, msg
 
@@ -1047,17 +1053,6 @@ def test_mkn_unscorable_docs_and_empty_model(spark):
     out2 = {r.doc_id: r for r in
             curate.mkn_perplexity(docs, "lang = 'none'").collect()}
     assert out2[0].sum_invp == 0
-
-
-def test_mkn_oracle_parity_inline(spark, documents):
-    from tests.conftest import SF_DIR
-    from tests.oracle_parity import compare, duck_connection
-
-    ok, msg = compare(
-        curate.mkn_perplexity(documents, "lang = 'en'").orderBy("doc_id"),
-        curate.mkn_perplexity_oracle_sql(train_where="lang = 'en'"),
-        duck_connection(SF_DIR))
-    assert ok, msg
 
 
 def test_anneal_mix_arithmetic_both_branches(spark):
