@@ -4358,8 +4358,9 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_st23(spark, sf):
         # the trigram stupid-backoff gate at ingest: same foreachBatch
-        # machinery as q_st22 at order 3 — model + tertile threshold
-        # calibrated batch-side, survivor set batch-oracle-identical
+        # machinery as q_st22 with smoothing="sbo" — model + tertile
+        # threshold calibrated batch-side, survivor set
+        # batch-oracle-identical
         import tempfile
 
         from cassandra_ttl_remover_spark.streaming.ttl_stream import (
@@ -4374,7 +4375,7 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         base = tempfile.mkdtemp(prefix="ctrs_sbo_st_")
         st = scan_stream(spark, sf, glob="documents.parquet")
         stream_lm_gate(st, model, base + "/out", base + "/ckpt",
-                       threshold=int(cuts.t2), order=3)
+                       threshold=int(cuts.t2), smoothing="sbo")
         # drop the b=<batch_id> idempotence-layout column (see
         # stream_lm_gate: per-batch overwrite directories)
         return (spark.read.parquet(base + "/out").drop("b")

@@ -21,6 +21,8 @@ recursive-CTE connected-components step.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1724,18 +1726,21 @@ ORDER BY d.{id_col}
 """
 
 # ---------------------------------------------------------------------------
-# CCNet-style n-gram LM fluency scoring (Wenzek et al. 2020)
+# n-gram LM fluency scoring (CCNet, Wenzek et al. 2020): one featurizer,
+# one per-document reduce, one scheme object per smoothing
 # ---------------------------------------------------------------------------
 
-def _lm_bigrams(docs: DataFrame, text_col: str, id_col: str,
-                buckets: int, keep_empty: bool = False) -> DataFrame:
-    """``(id, u, v)`` — one row per consecutive-token bigram, each token
-    hashed into ``buckets`` independently (``u`` the context bucket,
-    ``v`` the next-token bucket). The word array is hoisted, then hashed
-    ONCE per token (``_bs``) before pairing — inlining the bucket hash
-    into the pair lambda would md5 every token twice. Pure projection +
-    explode: only 8-byte bucket ints ever reach an exchange, the text
-    never does (the _dsir_features stance).
+#: gram column names by position in the n-gram (orders up to 6)
+_GRAM_COLS = "uvwxyz"
+
+
+def _ngrams(docs: DataFrame, n: int, text_col: str, id_col: str,
+            buckets: int, keep_empty: bool = False) -> DataFrame:
+    """``(id, u, v[, w])`` — one row per run of ``n`` consecutive tokens
+    (2: bigrams, 3: trigrams), each token hashed into ``buckets``
+    independently. The word array is hoisted, then hashed ONCE per token
+    (``_bs``) before the grams are formed. Pure projection + explode:
+    only 8-byte bucket ints ever reach an exchange, the text never does.
 
     Parallelism floor (guide §2.5 input skew / plans.fan_out): the
     tokenize+md5 projection is the CPU cost of every LM operator, so the
@@ -1746,19 +1751,20 @@ def _lm_bigrams(docs: DataFrame, text_col: str, id_col: str,
     column — hashing on that would recreate the skew. Filter-pushdown
     discipline: the short-doc guard lives INSIDE the projection (CASE ->
     empty array) and the explode is the OUTER form, because an explicit
-    ``filter(size(_bs) >= 2)`` / non-outer explode yields an inferred
+    ``filter(size(_bs) >= n)`` / non-outer explode yields an inferred
     size()>0 filter that Catalyst pushes below the fan-out exchange,
     re-evaluating the whole md5 chain single-task on the scan side (the
     line_dedup r12 finding); a filter on the GENERATED column cannot
     sink past the Generate.
 
-    ``keep_empty=True`` keeps the outer-explode's placeholder row (u/v
-    NULL) for documents with < 2 tokens, so a downstream groupBy(id)
-    emits one row per INPUT doc directly — the scorers consume this
-    form to skip the corpus-sized stitch-back join they otherwise need
-    to re-attach unscorable docs (r12: removed one Exchange+Sort+SMJ
-    per scoring entry). Model training keeps the default (bigram rows
-    only)."""
+    ``keep_empty=True`` keeps the outer-explode's placeholder row (grams
+    NULL) for documents with < ``n`` tokens, so a downstream groupBy(id)
+    emits one row per INPUT doc directly — no corpus-sized stitch-back
+    join to re-attach unscorable docs."""
+    cols = _GRAM_COLS[:n]
+    tag = "_bg" if n == 2 else "_tg"
+    idx = ["i"] + [f"i + {k}" for k in range(1, n)]
+    fields = ", ".join(f"element_at(_bs, {i}) AS {c}" for i, c in zip(idx, cols))
     ws = f"filter(split({text_col}, ' '), w -> w <> '')"
     exploded = (
         fan_out(docs.select(F.col(id_col), F.col(text_col)))
@@ -1770,19 +1776,358 @@ def _lm_bigrams(docs: DataFrame, text_col: str, id_col: str,
         )
         .select(
             F.col(id_col),
-            F.expr(
-                "CASE WHEN size(_bs) >= 2 THEN "
-                "transform(sequence(1, size(_bs) - 1), "
-                "i -> struct(element_at(_bs, i) AS u, "
-                "element_at(_bs, i + 1) AS v)) "
-                "ELSE array() END").alias("_bga"),
+            F.expr(f"CASE WHEN size(_bs) >= {n} THEN transform(sequence(1, "
+                   f"size(_bs) - {n - 1}), i -> struct({fields})) "
+                   "ELSE array() END").alias(f"{tag}a"),
         )
-        .select(F.col(id_col), F.explode_outer("_bga").alias("_bg"))
+        .select(F.col(id_col), F.explode_outer(f"{tag}a").alias(tag))
     )
     if not keep_empty:
-        exploded = exploded.filter(F.col("_bg").isNotNull())
-    return exploded.select(F.col(id_col), F.col("_bg.u").alias("u"),
-                           F.col("_bg.v").alias("v"))
+        exploded = exploded.filter(F.col(tag).isNotNull())
+    return exploded.select(F.col(id_col),
+                           *[F.col(f"{tag}.{c}").alias(c) for c in cols])
+
+
+#: a marginal lookup: the frame (broadcast hint included), its join keys
+#: (None for a keyless 1-row frame) and the join type
+_Lookup = tuple[DataFrame, list[str] | None, str | None]
+
+
+@dataclass(frozen=True)
+class _LMScheme:
+    """One smoothing scheme of the n-gram LM, as data over one kernel.
+    The model is the order-``order`` gram histogram ``(u, v[, w],
+    <count>)`` of the reference corpus, checkpointed once; ``lookups``
+    derives every marginal frame from it (never a second corpus pass).
+    Scoring joins the corpus grams to the histogram and the lookups on
+    int keys and sums the per-gram ``invp`` (the Spark SQL CASE tail
+    after the NULL-gram guard; ``{buckets}``/``{scale}`` placeholders)
+    by doc id — text never shuffles; ``out = sum_invp div n_col``, NULL
+    with no gram. ``counters``: extra per-doc counts ``(name, row alias,
+    Spark expr, DuckDB expr)``. A hot gram ("of the" everywhere) skews
+    the histogram join once the model outgrows broadcast — the shape
+    AQE's skew-join split re-plans (tests/test_scale_rehearsal.py).
+
+    The ``duck_*`` fields restate marginals, joins and inverse
+    probability as DuckDB SQL over the oracle's ``hist`` CTE, written
+    separately (never derived from the Spark side) so every oracle
+    stays an independent check."""
+
+    order: int
+    count: str
+    n_col: str
+    out: str
+    lookups: Callable[[DataFrame], list[_Lookup]]
+    invp: str
+    duck_marginals: str
+    duck_joins: str
+    duck_invp: str
+    counters: tuple[tuple[str, str, str, str], ...] = ()
+
+    def train(self, train_docs: DataFrame, text_col: str, id_col: str,
+              buckets: int) -> DataFrame:
+        return (_ngrams(train_docs, self.order, text_col, id_col, buckets)
+                .groupBy(*_GRAM_COLS[:self.order])
+                .agg(F.count("*").cast("long").alias(self.count))
+                .localCheckpoint(eager=False))
+
+    def score(self, docs: DataFrame, model: DataFrame, text_col: str,
+              id_col: str, buckets: int, scale: int) -> DataFrame:
+        scored = _ngrams(docs, self.order, text_col, id_col, buckets,
+                         keep_empty=True).join(
+            model, list(_GRAM_COLS[:self.order]), "left")
+        for frame, on, how in self.lookups(model):
+            scored = scored.join(frame, on, how)
+        invp = ("CASE WHEN u IS NULL THEN CAST(NULL AS BIGINT) "
+                + self.invp.format(buckets=buckets, scale=scale))
+        return (
+            scored.select(F.col(id_col), F.col("u"),
+                          *[F.expr(e).alias(a) for _, a, e, _ in self.counters],
+                          F.expr(invp).alias("_invp"))
+            .groupBy(id_col)
+            .agg(
+                F.count("u").cast("long").alias(self.n_col),
+                *[F.sum(a).cast("long").alias(c) for c, a, _, _ in self.counters],
+                F.coalesce(F.sum("_invp"), F.lit(0)).cast("long")
+                .alias("sum_invp"),
+            )
+            .withColumn(self.out, F.expr(
+                f"CASE WHEN {self.n_col} > 0 THEN sum_invp div {self.n_col} "
+                "ELSE CAST(NULL AS BIGINT) END"))
+        )
+
+    def perplexity(self, docs: DataFrame, train_where: str, text_col: str,
+                   id_col: str, buckets: int, scale: int) -> DataFrame:
+        model = self.train(docs.filter(train_where), text_col, id_col, buckets)
+        return self.score(docs, model, text_col, id_col, buckets, scale)
+
+    def oracle_ctes(self, train_where: str, table: str, id_col: str,
+                    buckets: int, scale: int) -> list[str]:
+        """DuckDB CTE chain ending in ``scores``: :meth:`score`'s columns
+        for every row of ``table``."""
+        keys = ", ".join(_GRAM_COLS[:self.order])
+        per = "".join(f"sum({d})::BIGINT AS {c}, " for c, _, _, d in self.counters)
+        tot = "".join(f"coalesce({c}, 0)::BIGINT AS {c}, "
+                      for c, _, _, _ in self.counters)
+        n = self.n_col
+        return [
+            _duck_ngrams("g_all", f"{id_col}, ", table, "TRUE", self.order, buckets),
+            _duck_ngrams("g_tr", "", table, train_where, self.order, buckets),
+            f"hist AS MATERIALIZED (SELECT {keys}, count(*)::BIGINT AS "
+            f"{self.count} FROM g_tr GROUP BY {keys})",
+            self.duck_marginals, f"""per AS MATERIALIZED (
+  SELECT {id_col}, count(*)::BIGINT AS {n}, {per}
+         sum({self.duck_invp.format(buckets=buckets, scale=scale)})::BIGINT
+           AS sum_invp
+  FROM g_all LEFT JOIN hist USING ({keys}) {self.duck_joins}
+  GROUP BY {id_col}
+)""", f"""scores AS MATERIALIZED (
+  SELECT d.{id_col}, coalesce({n}, 0)::BIGINT AS {n}, {tot}
+         coalesce(sum_invp, 0)::BIGINT AS sum_invp,
+         (CASE WHEN coalesce({n}, 0) > 0 THEN sum_invp // {n} END)::BIGINT
+           AS {self.out}
+  FROM {table} d LEFT JOIN per USING ({id_col})
+)"""]
+
+    def oracle_sql(self, train_where: str, table: str = "documents",
+                   id_col: str = "doc_id", buckets: int = 4096,
+                   scale: int = 1000) -> str:
+        """DuckDB recomputation of the scheme's scores over ``table``."""
+        ctes = self.oracle_ctes(train_where, table, id_col, buckets, scale)
+        return ("WITH " + ",\n".join(ctes)
+                + f"\nSELECT * FROM scores ORDER BY {id_col}")
+
+    def gate_oracle_sql(self, train_where: str, table: str = "documents",
+                        id_col: str = "doc_id", buckets: int = 4096,
+                        scale: int = 1000) -> str:
+        """Every scored doc at or under the exact middle/tail tertile cut
+        t2 — CCNet's keep rule, batch or streamed (stream_lm_gate's
+        survivor set is identical by per-doc independence)."""
+        ctes = (self.oracle_ctes(train_where, table, id_col, buckets, scale)
+                + _duck_tertile_ctes(self.out))
+        return ("WITH " + ",\n".join(ctes) + f"\nSELECT scores.* FROM scores"
+                f" CROSS JOIN cuts WHERE {self.out} <= t2 ORDER BY {id_col}")
+
+
+def _duck_ngrams(name: str, keep: str, table: str, where: str, n: int,
+                 buckets: int) -> str:
+    """DuckDB CTE ``name``: the ``keep`` columns (a select-list prefix)
+    plus ``u, v[, w]`` for every ``n``-gram of the ``table`` rows
+    matching ``where`` — the oracle form of :func:`_ngrams`."""
+    grams = ", ".join(
+        f"unnest(list_transform(range(1, len(bs) - {n - 2}), "
+        f"i -> bs[i + {k}])) AS {c}" for k, c in enumerate(_GRAM_COLS[:n]))
+    ws = "[w for w in string_split(text, ' ') if w <> '']"
+    return f"""{name} AS MATERIALIZED (
+  SELECT * EXCLUDE (bs), {grams}
+  FROM (SELECT {keep}list_transform({ws}, w -> {_dsir_bucket_duck('w', buckets)})
+          AS bs FROM {table} WHERE {where})
+  WHERE len(bs) >= {n}
+)"""
+
+
+def _duck_tertile_ctes(col: str) -> list[str]:
+    """DuckDB CTEs ending in the 1-row ``cuts(t1, t2)``: the exact tertile
+    cuts of ``scores.col`` (:func:`lm_tertile_cuts`' rule) by a window
+    cumulative count."""
+    return [f"h AS (SELECT {col} AS p, count(*)::BIGINT AS cnt FROM scores "
+            f"WHERE {col} IS NOT NULL GROUP BY {col})",
+            "cum AS (SELECT p, sum(cnt) OVER (ORDER BY p)::BIGINT AS c FROM h)",
+            """cuts AS (
+  SELECT min(CASE WHEN c >= greatest(1, CAST(ceil(_n / 3.0) AS BIGINT))
+                  THEN p END) AS t1,
+         min(CASE WHEN c >= greatest(1, CAST(ceil(2.0 * _n / 3.0)
+                                             AS BIGINT)) THEN p END) AS t2
+  FROM cum CROSS JOIN (SELECT max(c) AS _n FROM cum)
+)"""]
+
+
+def _add1_lookups(model: DataFrame) -> list[_Lookup]:
+    ctx = model.groupBy("u").agg(F.sum("c_uv").cast("long").alias("c_u"))
+    return [(F.broadcast(ctx), ["u"], "left")]
+
+
+def _sbo_lookups(model: DataFrame) -> list[_Lookup]:
+    # the small marginals derive from the type-bounded A/B2 (C1 = Σ_w A,
+    # D = Σ_v B2, T = Σ C1), not from the corpus-bounded histogram
+    a_ctx = model.groupBy("u", "v").agg(
+        F.sum("c3").cast("long").alias("a_uv")).localCheckpoint(eager=False)
+    b2 = model.groupBy("v", "w").agg(
+        F.sum("c3").cast("long").alias("b_vw")).localCheckpoint(eager=False)
+    c1 = a_ctx.groupBy("v").agg(F.sum("a_uv").cast("long").alias("c_v"))
+    d1 = b2.groupBy("w").agg(F.sum("b_vw").cast("long").alias("d_w"))
+    tot = c1.agg(F.sum("c_v").cast("long").alias("t_all"))
+    return [(a_ctx, ["u", "v"], "left"), (b2, ["v", "w"], "left"),
+            (F.broadcast(c1), ["v"], "left"), (F.broadcast(d1), ["w"], "left"),
+            (F.broadcast(tot), None, "cross")]
+
+
+def _kn_lookups(model: DataFrame) -> list[_Lookup]:
+    ctx = model.groupBy("u").agg(
+        F.sum("c_uv").cast("long").alias("c_u"),
+        F.count("*").cast("long").alias("n1f"),
+    )
+    tt = model.agg(F.count("*").cast("long").alias("t_types"))
+    return [(F.broadcast(ctx), ["u"], "left"),
+            (F.broadcast(_continuations(model)), ["v"], "left"),
+            (F.broadcast(tt), None, None)]
+
+
+def _mkn_lookups(model: DataFrame) -> list[_Lookup]:
+    ctx = model.groupBy("u").agg(
+        F.sum("c_uv").cast("long").alias("c_u"),
+        *[F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
+          for name, cond in (("n1u", F.col("c_uv") == 1),
+                             ("n2u", F.col("c_uv") == 2),
+                             ("n3u", F.col("c_uv") >= 3))],
+    )
+    # count-of-counts n1..n4 + type total, then the three quantized
+    # discounts — ONE 1-row frame broadcast into the scoring join
+    disc = (
+        model.agg(
+            F.count("*").cast("long").alias("t_types"),
+            *[F.sum(F.when(F.col("c_uv") == i, 1).otherwise(0))
+              .cast("long").alias(f"n{i}") for i in (1, 2, 3, 4)],
+        )
+        .select(
+            "t_types",
+            F.expr("(1024L * n1) div greatest(n1 + 2L * n2, 1L)").alias("d1"),
+            F.expr("greatest(0L, 2048L - (3072L * n1 * n3) div "
+                   "greatest(n2 * (n1 + 2L * n2), 1L))").alias("d2"),
+            F.expr("greatest(0L, 3072L - (4096L * n1 * n4) div "
+                   "greatest(n3 * (n1 + 2L * n2), 1L))").alias("d3"),
+        )
+    )
+    return [(F.broadcast(ctx), ["u"], "left"),
+            (F.broadcast(_continuations(model)), ["v"], "left"),
+            (F.broadcast(disc), None, None)]
+
+
+def _continuations(model: DataFrame) -> DataFrame:
+    """``(v, n1b)``: N1+(.v), KN's continuation count."""
+    return model.groupBy("v").agg(F.count("*").cast("long").alias("n1b"))
+
+
+_ADD1_INVP = ("((coalesce(c_u, 0L) + {buckets}) * {scale})"
+              " div (coalesce(c_uv, 0L) + 1)")
+
+_ADD1 = _LMScheme(
+    order=2, count="c_uv", n_col="n_bigrams", out="ppl_permille",
+    lookups=_add1_lookups,
+    invp=f"ELSE {_ADD1_INVP} END",
+    duck_marginals="ch AS MATERIALIZED (SELECT u, sum(c_uv)::BIGINT AS c_u "
+                   "FROM hist GROUP BY u)",
+    duck_joins="LEFT JOIN ch USING (u)",
+    duck_invp=("((coalesce(c_u, 0) + {buckets}) * {scale})"
+               " // (coalesce(c_uv, 0) + 1)"),
+)
+
+_SBO = _LMScheme(
+    order=3, count="c3", n_col="n_trigrams", out="sbo_permille",
+    lookups=_sbo_lookups,
+    invp=("WHEN coalesce(c3, 0L) > 0 THEN ({scale} * a_uv) div c3"
+          " WHEN coalesce(b_vw, 0L) > 0"
+          " THEN (5 * {scale} * c_v) div (2 * b_vw)"
+          " ELSE (25 * {scale} * (t_all + {buckets}))"
+          " div (4 * (coalesce(d_w, 0L) + 1)) END"),
+    duck_marginals="""
+actx AS (SELECT u, v, sum(c3)::BIGINT AS a_uv FROM hist GROUP BY u, v),
+b2 AS (SELECT v, w, sum(c3)::BIGINT AS b_vw FROM hist GROUP BY v, w),
+c1 AS (SELECT v, sum(c3)::BIGINT AS c_v FROM hist GROUP BY v),
+d1 AS (SELECT w, sum(c3)::BIGINT AS d_w FROM hist GROUP BY w),
+tt AS (SELECT sum(c3)::BIGINT AS t_all FROM hist)""",
+    duck_joins=("LEFT JOIN actx USING (u, v) LEFT JOIN b2 USING (v, w)"
+                " LEFT JOIN c1 USING (v) LEFT JOIN d1 USING (w) CROSS JOIN tt"),
+    duck_invp="""CASE WHEN coalesce(c3, 0) > 0 THEN ({scale} * a_uv) // c3
+                  WHEN coalesce(b_vw, 0) > 0
+                  THEN (5 * {scale} * c_v) // (2 * b_vw)
+                  ELSE (25 * {scale} * (t_all + {buckets}))
+                       // (4 * (coalesce(d_w, 0) + 1)) END""",
+    counters=(
+        ("n_hits3", "_h3", "if(coalesce(c3, 0L) > 0, 1L, 0L)",
+         "CASE WHEN coalesce(c3, 0) > 0 THEN 1 ELSE 0 END"),
+        ("n_hits2", "_h2",
+         "if(coalesce(c3, 0L) = 0 and coalesce(b_vw, 0L) > 0, 1L, 0L)",
+         "CASE WHEN coalesce(c3, 0) = 0 AND coalesce(b_vw, 0) > 0"
+         " THEN 1 ELSE 0 END"),
+    ),
+)
+
+_KN = _LMScheme(
+    order=2, count="c_uv", n_col="n_bigrams", out="kn_permille",
+    lookups=_kn_lookups,
+    invp=("ELSE least(CASE WHEN c_u IS NOT NULL"
+          " THEN (4L * c_u * t_types * {scale}) div greatest("
+          "   t_types * greatest(4L * coalesce(c_uv, 0L) - 3L, 0L)"
+          "   + 3L * n1f * coalesce(n1b, 0L), 1L)"
+          " ELSE (t_types * {scale}) div greatest(coalesce(n1b, 0L), 1L) END,"
+          " 4L * (t_types + {buckets}) * {scale}) END"),
+    duck_marginals="""ch AS MATERIALIZED (SELECT u, sum(c_uv)::BIGINT AS c_u,
+                           count(*)::BIGINT AS n1f
+                    FROM hist GROUP BY u),
+bh AS MATERIALIZED (SELECT v, count(*)::BIGINT AS n1b FROM hist GROUP BY v),
+tt AS MATERIALIZED (SELECT count(*)::BIGINT AS t_types FROM hist)""",
+    duck_joins="LEFT JOIN ch USING (u) LEFT JOIN bh USING (v) CROSS JOIN tt",
+    duck_invp=("least(CASE WHEN c_u IS NOT NULL"
+               " THEN (4 * c_u::HUGEINT * t_types * {scale}) // greatest("
+               "   t_types::HUGEINT * greatest(4 * coalesce(c_uv, 0) - 3, 0)"
+               "   + 3 * n1f::HUGEINT * coalesce(n1b, 0), 1)"
+               " ELSE (t_types::HUGEINT * {scale})"
+               " // greatest(coalesce(n1b, 0), 1) END,"
+               " 4 * (t_types::HUGEINT + {buckets}) * {scale})"),
+)
+
+_MKN = _LMScheme(
+    order=2, count="c_uv", n_col="n_bigrams", out="mkn_permille",
+    lookups=_mkn_lookups,
+    invp=("ELSE least(CASE WHEN c_u IS NOT NULL"
+          " THEN (1024L * c_u * t_types * {scale}) div greatest("
+          "    t_types * greatest(1024L * coalesce(c_uv, 0L)"
+          "      - CASE WHEN coalesce(c_uv, 0L) = 1 THEN d1"
+          "             WHEN c_uv = 2 THEN d2"
+          "             WHEN c_uv >= 3 THEN d3 ELSE 0L END, 0L)"
+          "    + (d1 * n1u + d2 * n2u + d3 * n3u) * coalesce(n1b, 0L), 1L)"
+          " ELSE (t_types * {scale}) div greatest(coalesce(n1b, 0L), 1L) END,"
+          " 1024L * (t_types + {buckets}) * {scale}) END"),
+    duck_marginals="""ch AS MATERIALIZED (
+  SELECT u, sum(c_uv)::BIGINT AS c_u,
+         sum(CASE WHEN c_uv = 1 THEN 1 ELSE 0 END)::BIGINT AS n1u,
+         sum(CASE WHEN c_uv = 2 THEN 1 ELSE 0 END)::BIGINT AS n2u,
+         sum(CASE WHEN c_uv >= 3 THEN 1 ELSE 0 END)::BIGINT AS n3u
+  FROM hist GROUP BY u),
+bh AS MATERIALIZED (SELECT v, count(*)::BIGINT AS n1b FROM hist GROUP BY v),
+dsc AS MATERIALIZED (
+  SELECT t_types,
+         ((1024 * n1) // greatest(n1 + 2 * n2, 1))::BIGINT AS d1,
+         greatest(0, 2048 - (3072 * n1::HUGEINT * n3)
+                  // greatest(n2::HUGEINT * (n1 + 2 * n2), 1))::BIGINT
+           AS d2,
+         greatest(0, 3072 - (4096 * n1::HUGEINT * n4)
+                  // greatest(n3::HUGEINT * (n1 + 2 * n2), 1))::BIGINT
+           AS d3
+  FROM (SELECT count(*)::BIGINT AS t_types,
+               count(*) FILTER (WHERE c_uv = 1) AS n1,
+               count(*) FILTER (WHERE c_uv = 2) AS n2,
+               count(*) FILTER (WHERE c_uv = 3) AS n3,
+               count(*) FILTER (WHERE c_uv = 4) AS n4 FROM hist)
+)""",
+    duck_joins="LEFT JOIN ch USING (u) LEFT JOIN bh USING (v) CROSS JOIN dsc",
+    duck_invp=("least(CASE WHEN c_u IS NOT NULL"
+               " THEN (1024 * c_u::HUGEINT * t_types * {scale}) // greatest("
+               "    t_types::HUGEINT * greatest(1024 * coalesce(c_uv, 0)"
+               "      - CASE WHEN coalesce(c_uv, 0) = 1 THEN d1"
+               "             WHEN c_uv = 2 THEN d2"
+               "             WHEN c_uv >= 3 THEN d3 ELSE 0 END, 0)"
+               "    + (d1::HUGEINT * n1u + d2 * n2u + d3 * n3u)"
+               "      * coalesce(n1b, 0), 1)"
+               " ELSE (t_types::HUGEINT * {scale})"
+               " // greatest(coalesce(n1b, 0), 1) END,"
+               " 1024 * (t_types::HUGEINT + {buckets}) * {scale})"),
+)
+
+#: the smoothing schemes by name (streaming.stream_lm_gate dispatches on
+#: these); each scheme's model is what its ``*_model`` function trains
+LM_SCHEMES = {"add1": _ADD1, "sbo": _SBO, "kn": _KN, "mkn": _MKN}
 
 
 def lm_perplexity(docs: DataFrame, train_where: str,
@@ -1813,40 +2158,21 @@ def lm_perplexity(docs: DataFrame, train_where: str,
     ``(id, n_bigrams, sum_invp, ppl_permille)`` — NULL ppl for docs
     with < 2 tokens (unscorable; CCNet drops them).
 
-    Scale: training is ONE bigram featurize (explode of int pairs) into
-    a map-side-combined (u, v) histogram, checkpointed once; the context
-    marginal c(u) derives from that histogram (<= ``buckets`` rows,
-    broadcast — never a second corpus pass). Scoring joins the corpus
-    bigram frame against the pair histogram on two int keys (AQE picks
-    broadcast when the occupied-pair count is small; worst case it is a
-    shuffle of 8-byte ints bounded by buckets^2 dictionary rows) and
-    reduces by doc id — text never shuffles. int64 discipline: terms
-    are <= (train_bigrams + B) * scale; the per-doc sum stays under
-    2^63 to ~10^15 term-mass — past that, drop ``scale`` or promote the
-    sum to decimal(38,0) like logreg_train documents. Hot-bigram skew
-    ("of the" in every document makes one (u, v) join key carry ~1% of
-    a 100 TB corpus): the pair-histogram join is a plain shuffle join
-    when the model outgrows broadcast, which is exactly the shape AQE's
-    skew-join split re-plans at runtime — rehearsed in
-    tests/test_scale_rehearsal.py."""
-    model = lm_model(docs.filter(train_where), text_col, id_col, buckets)
-    return lm_score(docs, model, text_col=text_col, id_col=id_col,
-                    buckets=buckets, scale=scale)
+    Scale: the :class:`_LMScheme` plan; the context marginal c(u) is
+    <= ``buckets`` rows, broadcast. int64 discipline: terms are
+    <= (train_bigrams + B) * scale; the per-doc sum stays under 2^63 to
+    ~10^15 term-mass — past that, drop ``scale`` or promote the sum to
+    decimal(38,0) like logreg_train documents."""
+    return _ADD1.perplexity(docs, train_where, text_col, id_col, buckets, scale)
 
 
 def lm_model(train_docs: DataFrame, text_col: str = "text",
              id_col: str = "doc_id", buckets: int = 4096) -> DataFrame:
-    """THE trained LM artifact: the ``(u, v, c_uv)`` bigram pair
-    histogram over the clean reference corpus, checkpointed once (it
-    feeds both the scoring join and the derived context marginal).
+    """THE trained bigram LM artifact (add-1, KN and modified KN): the
+    ``(u, v, c_uv)`` pair histogram over the clean reference corpus.
     Train batch-side, score anywhere — :func:`lm_score` for batch,
     streaming.stream_lm_gate per micro-batch."""
-    return (
-        _lm_bigrams(train_docs, text_col, id_col, buckets)
-        .groupBy("u", "v")
-        .agg(F.count("*").cast("long").alias("c_uv"))
-        .localCheckpoint(eager=False)
-    )
+    return _ADD1.train(train_docs, text_col, id_col, buckets)
 
 
 def lm_score(docs: DataFrame, model: DataFrame, *,
@@ -1855,95 +2181,172 @@ def lm_score(docs: DataFrame, model: DataFrame, *,
     """Score ``docs`` against a trained :func:`lm_model` — the serving
     half of :func:`lm_perplexity` (same output contract: one row per
     input doc, NULL ppl for the unscorable). Per-doc independent, so
-    scoring a micro-batch equals scoring the same rows in one batch.
-
-    Plan shape (r12): the featurize keeps the outer-explode placeholder
-    row for < 2-token docs (``keep_empty``), so the doc-id reduce emits
-    one row per input doc by itself — no stitch-back join of the corpus
-    id frame (removed one Exchange+Sort+SortMergeJoin per scoring
-    entry; the null-keyed rows never match the left joins and score
-    NULL)."""
-    bg_all = _lm_bigrams(docs, text_col, id_col, buckets, keep_empty=True)
-    ctx_hist = model.groupBy("u").agg(
-        F.sum("c_uv").cast("long").alias("c_u"))
-    return (
-        bg_all
-        .join(model, ["u", "v"], "left")
-        .join(F.broadcast(ctx_hist), ["u"], "left")
-        .select(
-            F.col(id_col),
-            F.col("u"),
-            F.expr(
-                "CASE WHEN u IS NULL THEN CAST(NULL AS BIGINT) ELSE"
-                f" ((coalesce(c_u, 0L) + {buckets}) * {scale})"
-                " div (coalesce(c_uv, 0L) + 1) END"
-            ).alias("_invp"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.count("u").cast("long").alias("n_bigrams"),
-            F.coalesce(F.sum("_invp"), F.lit(0)).cast("long")
-            .alias("sum_invp"),
-        )
-        .withColumn(
-            "ppl_permille",
-            F.expr("CASE WHEN n_bigrams > 0 THEN sum_invp div n_bigrams "
-                   "ELSE CAST(NULL AS BIGINT) END"),
-        )
-    )
+    scoring a micro-batch equals scoring the same rows in one batch."""
+    return _ADD1.score(docs, model, text_col, id_col, buckets, scale)
 
 
-def _lm_duck_ctes(train_where: str, table: str, id_col: str,
-                  buckets: int, scale: int) -> list[str]:
-    """Shared CTE chain for the LM oracles, ending in
-    ``scores({id}, n_bigrams, sum_invp, ppl_permille)`` total over
-    ``table`` — :func:`lm_perplexity_oracle_sql` and the bucket/report
-    oracles compose it (the _lr_duck_ctes convention)."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
-    return [f"""b_all AS (
-  SELECT {id_col}, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {id_col}, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 2
-)""", f"""bg_all AS (
-  SELECT {id_col},
-         unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_all
-)""", f"""b_tr AS (
-  SELECT list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {ws} AS ws FROM {table} WHERE {train_where})
-  WHERE len(ws) >= 2
-)""", f"""bg_tr AS (
-  SELECT unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_tr
-)""", "ph AS (SELECT u, v, count(*)::BIGINT AS c_uv FROM bg_tr "
-      "GROUP BY u, v)",
-      "ch AS (SELECT u, sum(c_uv)::BIGINT AS c_u FROM ph GROUP BY u)",
-      f"""per AS (
-  SELECT {id_col}, count(*)::BIGINT AS n_bigrams,
-         sum(((coalesce(c_u, 0) + {buckets}) * {scale})
-             // (coalesce(c_uv, 0) + 1))::BIGINT AS sum_invp
-  FROM bg_all LEFT JOIN ph USING (u, v) LEFT JOIN ch USING (u)
-  GROUP BY {id_col}
-)""", f"""scores AS (
-  SELECT d.{id_col}, coalesce(n_bigrams, 0)::BIGINT AS n_bigrams,
-         coalesce(sum_invp, 0)::BIGINT AS sum_invp,
-         (CASE WHEN coalesce(n_bigrams, 0) > 0
-               THEN sum_invp // n_bigrams END)::BIGINT AS ppl_permille
-  FROM {table} d LEFT JOIN per USING ({id_col})
-)"""]
+def sbo_model(train_docs: DataFrame, text_col: str = "text",
+              id_col: str = "doc_id", buckets: int = 4096) -> DataFrame:
+    """The trigram LM artifact: the ``(u, v, w, c3)`` trigram histogram
+    over the reference corpus; EVERY backoff marginal derives from it."""
+    return _SBO.train(train_docs, text_col, id_col, buckets)
 
 
-def lm_perplexity_oracle_sql(train_where: str, table: str = "documents",
-                             id_col: str = "doc_id",
-                             buckets: int = 4096,
-                             scale: int = 1000) -> str:
-    """DuckDB recomputation of :func:`lm_perplexity` over ``table``."""
-    ctes = _lm_duck_ctes(train_where, table, id_col, buckets, scale)
-    return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT * FROM scores ORDER BY {id_col}")
+def sbo_perplexity(docs: DataFrame, train_where: str,
+                   text_col: str = "text", id_col: str = "doc_id",
+                   buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """Trigram LM fluency with STUPID BACKOFF (Brants et al. 2007, "Large
+    Language Models in Machine Translation" — the web-scale smoothing
+    that replaced Kneser-Ney at MapReduce scale, built for exactly this
+    distributed setting): score each document's trigrams at the deepest
+    level with evidence, backing off with factor alpha = 0.4 per level:
+
+        S(w | u,v) = N3(u,v,w) / A(u,v)              if N3 > 0
+                   = 0.4 * B2(v,w) / C1(v)           elif B2 > 0
+                   = 0.16 * (D(w) + 1) / (T + B)     otherwise (add-1)
+
+    where every marginal derives from the trigram histogram (A = sum
+    over w, B2 = sum over u, C1 = sum over u,w, D = sum over u,v, T =
+    total — a DECLARED surrogate: true bigram counts differ at document
+    edges, but the derived marginals keep the model one training pass
+    and the hierarchy consistent). alpha = 2/5 is RATIONAL, so the
+    per-trigram scaled inverse score is exact integer arithmetic at
+    every level (the lm_perplexity stance):
+
+        term = scale * A div N3                          (level 3)
+             = (5 * scale * C1) div (2 * B2)             (level 2)
+             = (25 * scale * (T + B)) div (4 * (D + 1))  (level 1)
+
+    Output one row per input doc: ``(id, n_trigrams, n_hits3, n_hits2,
+    sum_invp, sbo_permille)`` — the per-level hit counts make the
+    backoff structure itself checkable; NULL sbo for docs with < 3
+    tokens.
+
+    Scale: the :class:`_LMScheme` plan; A and B2 are checkpointed
+    occupied-pair tables joined on two int keys, C1/D/T broadcast
+    (<= buckets rows / 1 row)."""
+    return _SBO.perplexity(docs, train_where, text_col, id_col, buckets, scale)
+
+
+def sbo_score(docs: DataFrame, model: DataFrame, *,
+              text_col: str = "text", id_col: str = "doc_id",
+              buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """Score ``docs`` against a trained :func:`sbo_model` — the serving
+    half of :func:`sbo_perplexity` (per-doc independent, streamable
+    through stream_lm_gate)."""
+    return _SBO.score(docs, model, text_col, id_col, buckets, scale)
+
+
+def kn_perplexity(docs: DataFrame, train_where: str,
+                  text_col: str = "text", id_col: str = "doc_id",
+                  buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """Interpolated Kneser-Ney fluency scoring (Chen & Goodman 1999 —
+    the empirically-best classical n-gram smoothing, and the one KenLM
+    serves; public method): train on the ``train_where`` subset, score
+    every document, over the SAME :func:`lm_model` histogram as add-1.
+
+    KN's two ideas survive the integer-rational translation intact
+    because absolute discounting is RATIONAL: with discount D = 3/4,
+
+        p(v|u) = max(c(u,v) - 3/4, 0)/c(u)
+                 + (3/4) * N1+(u.)/c(u) * N1+(.v)/T
+
+    over common denominator 4*c(u)*T (T = distinct bigram types,
+    N1+(u.) = distinct continuations of u, N1+(.v) = distinct contexts
+    of v — the continuation count, KN's signature). The score is the
+    engine's standard inverse-probability surrogate: per bigram,
+
+        inv = least( (4*c(u)*T*scale) div max(num, 1), cap )
+        num = T*max(4*c(u,v) - 3, 0) + 3*N1+(u.)*N1+(.v)
+
+    with an unseen CONTEXT falling back to the pure continuation
+    distribution ``inv = (T*scale) div max(N1+(.v), 1)`` and
+    ``cap = 4*(T + buckets)*scale`` bounding the never-seen-anywhere
+    token at the uniform-over-types floor (one unknown word cannot
+    dominate a document mean). Every operation is +,*,max,min and ONE
+    truncating division on non-negative ints — Spark ``div`` == DuckDB
+    ``//``, hash-exact. Output: ``(id, n_bigrams, sum_invp,
+    kn_permille)``, NULL kn for docs with < 2 tokens.
+
+    Scale: the :class:`_LMScheme` plan, ctx/continuation/type-count
+    marginals all broadcast. int64 discipline: 4*c(u)*T*scale must stay
+    under 2^63 — c(u) <= 1.4e8 at the default buckets/scale; past that
+    drop ``scale``."""
+    return _KN.perplexity(docs, train_where, text_col, id_col, buckets, scale)
+
+
+def kn_score(docs: DataFrame, model: DataFrame, *,
+             text_col: str = "text", id_col: str = "doc_id",
+             buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """Score ``docs`` against a trained :func:`lm_model` histogram with
+    interpolated Kneser-Ney — the serving half of :func:`kn_perplexity`
+    (lm_score's contract)."""
+    return _KN.score(docs, model, text_col, id_col, buckets, scale)
+
+
+def mkn_perplexity(docs: DataFrame, train_where: str,
+                   text_col: str = "text", id_col: str = "doc_id",
+                   buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """MODIFIED Kneser-Ney fluency scoring (Chen & Goodman 1999 §3;
+    public method) — the literature's production variant and KenLM's
+    actual default: instead of :func:`kn_perplexity`'s single fixed
+    discount, three DATA-DERIVED discounts D1/D2/D3+ apply to bigrams
+    seen once / twice / three-plus times, each estimated from the
+    model's count-of-count statistics n1..n4 (number of bigram types
+    with count exactly 1..4):
+
+        Y  = n1 / (n1 + 2 n2)
+        D1 = 1 - 2 Y n2 / n1 = Y          D2 = 2 - 3 Y n3 / n2
+        D3 = 3 - 4 Y n4 / n3              (each clamped at >= 0)
+
+    The discounts are RATIONAL in integer count-of-counts, but their
+    exact common denominator (n2 n3 (n1 + 2 n2)) overflows int64 when
+    multiplied through the score, so they are QUANTIZED once onto a
+    fixed /1024 grid with the engine's truncating division (Spark
+    ``div`` == DuckDB ``//``, hash-exact both sides):
+
+        d1 = (1024 n1) div (n1 + 2 n2)          [= 1024 Y]
+        d2 = max(0, 2048 - (3072 n1 n3) div (n2 (n1 + 2 n2)))
+        d3 = max(0, 3072 - (4096 n1 n4) div (n3 (n1 + 2 n2)))
+
+    — the discounts stay data-derived, only their last two bits are
+    grid noise. With
+    per-context continuation-type counts N1(u)/N2(u)/N3+(u) (number of
+    v with c(u,v) = 1 / = 2 / >= 3), the interpolation weight is
+    gamma(u) = (d1 N1 + d2 N2 + d3 N3+)/(1024 c(u)) — mKN's
+    leave-one-out mass — and per bigram
+
+        num = T (1024 c(u,v) - d(c(u,v)))_+ + (d1 N1 + d2 N2 + d3 N3+) N1+(.v)
+        inv = least( (1024 c(u) T scale) div max(num, 1), cap )
+
+    with the unseen-context fallback and cap exactly as KN
+    (``cap = 1024 (T + buckets) scale``). Output
+    ``(id, n_bigrams, sum_invp, mkn_permille)``; NULL for < 2 tokens.
+
+    Scale: kn_perplexity's plan; the count-of-counts and discounts are
+    ONE extra broadcast 1-row aggregate. int64 discipline: 1024 c(u) T
+    scale must stay under 2^63 — c(u) T <= 9e12 at scale=1000; past
+    that drop ``scale``."""
+    return _MKN.perplexity(docs, train_where, text_col, id_col, buckets, scale)
+
+
+def mkn_score(docs: DataFrame, model: DataFrame, *,
+              text_col: str = "text", id_col: str = "doc_id",
+              buckets: int = 4096, scale: int = 1000) -> DataFrame:
+    """Score ``docs`` against a trained :func:`lm_model` histogram with
+    modified Kneser-Ney — the serving half of :func:`mkn_perplexity`
+    (lm_score's contract)."""
+    return _MKN.score(docs, model, text_col, id_col, buckets, scale)
+
+
+#: DuckDB recomputations: each scheme's scores, and its CCNet keep rule
+lm_perplexity_oracle_sql = _ADD1.oracle_sql
+sbo_perplexity_oracle_sql = _SBO.oracle_sql
+kn_perplexity_oracle_sql = _KN.oracle_sql
+mkn_perplexity_oracle_sql = _MKN.oracle_sql
+lm_gate_oracle_sql = _ADD1.gate_oracle_sql
+sbo_gate_oracle_sql = _SBO.gate_oracle_sql
+mkn_gate_oracle_sql = _MKN.gate_oracle_sql
 
 
 def lm_perplexity_buckets(docs: DataFrame, train_where: str,
@@ -1954,16 +2357,11 @@ def lm_perplexity_buckets(docs: DataFrame, train_where: str,
     ``head`` / ``middle`` / ``tail`` by LM-perplexity TERTILES of the
     scored population (Wenzek et al. 2020 §4.3 keep head+middle, the
     tail is the noisy third). Cuts are EXACT order statistics — t_k is
-    the smallest ppl whose <=-cumulative count reaches ceil(k*n/3) —
-    computed from the ppl histogram via the two-level prefix scan (no
-    global sort, no single-partition window; the
-    classify.margin_threshold_frame construction, ascending form).
-    Unscorable docs (< 2 tokens) land in ``unscored``. Output one row
-    per input doc: ``(id, ppl_permille, ppl_bucket)``.
-
-    Scale: scoring is :func:`lm_perplexity`; the cut derivation adds
-    one <= distinct-ppl-cardinality histogram agg + the shard-parallel
-    scan; the cuts broadcast back as a 1-row frame."""
+    the smallest ppl whose <=-cumulative count reaches ceil(k*n/3)
+    (:func:`lm_tertile_cuts`, no global sort; the cuts broadcast back
+    as a 1-row frame). Unscorable docs (< 2 tokens) land in
+    ``unscored``. Output one row per input doc: ``(id, ppl_permille,
+    ppl_bucket)``."""
     scores = lm_perplexity(docs, train_where, text_col, id_col,
                            buckets, scale).localCheckpoint(eager=False)
     cuts = F.broadcast(lm_tertile_cuts(scores))
@@ -2018,24 +2416,9 @@ def lm_perplexity_buckets_oracle_sql(train_where: str,
                                      id_col: str = "doc_id",
                                      buckets: int = 4096,
                                      scale: int = 1000) -> str:
-    """DuckDB recomputation of :func:`lm_perplexity_buckets` — the shared
-    LM CTEs + window-cumulative tertile cuts (the window is fine oracle-
-    side; the Spark side proves the scan-parallel form)."""
-    ctes = _lm_duck_ctes(train_where, table, id_col, buckets, scale)
-    ctes.append("""h AS (
-  SELECT ppl_permille AS p, count(*)::BIGINT AS cnt
-  FROM scores WHERE ppl_permille IS NOT NULL GROUP BY ppl_permille
-)""")
-    ctes.append("""cum AS (
-  SELECT p, sum(cnt) OVER (ORDER BY p)::BIGINT AS c FROM h
-)""")
-    ctes.append("""cuts AS (
-  SELECT min(CASE WHEN c >= greatest(1, CAST(ceil(_n / 3.0) AS BIGINT))
-                  THEN p END) AS t1,
-         min(CASE WHEN c >= greatest(1, CAST(ceil(2.0 * _n / 3.0)
-                                             AS BIGINT)) THEN p END) AS t2
-  FROM cum CROSS JOIN (SELECT max(c) AS _n FROM cum)
-)""")
+    """DuckDB recomputation of :func:`lm_perplexity_buckets`."""
+    ctes = (_ADD1.oracle_ctes(train_where, table, id_col, buckets, scale)
+            + _duck_tertile_ctes("ppl_permille"))
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT {id_col}, ppl_permille,
        (CASE WHEN ppl_permille IS NULL THEN 'unscored'
@@ -2044,32 +2427,6 @@ SELECT {id_col}, ppl_permille,
              ELSE 'tail' END) AS ppl_bucket
 FROM scores CROSS JOIN cuts
 ORDER BY {id_col}""")
-
-
-def lm_gate_oracle_sql(train_where: str, table: str = "documents",
-                       id_col: str = "doc_id", buckets: int = 4096,
-                       scale: int = 1000) -> str:
-    """Oracle for the CCNet keep rule (batch or streamed —
-    streaming.stream_lm_gate's survivor set is identical by per-doc
-    independence): every scored doc with ``ppl <= t2``, the exact
-    middle/tail tertile cut."""
-    ctes = _lm_duck_ctes(train_where, table, id_col, buckets, scale)
-    ctes.append("""h AS (
-  SELECT ppl_permille AS p, count(*)::BIGINT AS cnt
-  FROM scores WHERE ppl_permille IS NOT NULL GROUP BY ppl_permille
-)""")
-    ctes.append("""cum AS (
-  SELECT p, sum(cnt) OVER (ORDER BY p)::BIGINT AS c FROM h
-)""")
-    ctes.append("""cuts AS (
-  SELECT min(CASE WHEN c >= greatest(1, CAST(ceil(2.0 * _n / 3.0)
-                                             AS BIGINT)) THEN p END) AS t2
-  FROM cum CROSS JOIN (SELECT max(c) AS _n FROM cum)
-)""")
-    return ("WITH " + ",\n".join(ctes) + f"""
-SELECT {id_col}, n_bigrams, sum_invp, ppl_permille
-FROM scores CROSS JOIN cuts
-WHERE ppl_permille <= t2 ORDER BY {id_col}""")
 
 
 def lm_domain_report(docs: DataFrame, train_where: str, *,
@@ -2108,7 +2465,7 @@ def lm_domain_report_oracle_sql(train_where: str, *,
                                 id_col: str = "doc_id",
                                 buckets: int = 4096,
                                 scale: int = 1000) -> str:
-    ctes = _lm_duck_ctes(train_where, table, id_col, buckets, scale)
+    ctes = _ADD1.oracle_ctes(train_where, table, id_col, buckets, scale)
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT d.{domain_col} AS domain, count(*)::BIGINT AS n_docs,
        count(ppl_permille)::BIGINT AS n_scored,
@@ -2118,258 +2475,6 @@ SELECT d.{domain_col} AS domain, count(*)::BIGINT AS n_docs,
         END)::BIGINT AS mean_ppl_permille
 FROM scores s JOIN {table} d USING ({id_col})
 GROUP BY d.{domain_col} ORDER BY domain""")
-
-
-# ---------------------------------------------------------------------------
-# trigram LM with stupid backoff (Brants et al. 2007)
-# ---------------------------------------------------------------------------
-
-def _lm_trigrams(docs: DataFrame, text_col: str, id_col: str,
-                 buckets: int, keep_empty: bool = False) -> DataFrame:
-    """``(id, u, v, w)`` — one row per consecutive-token trigram, each
-    token hashed once (the _lm_bigrams construction, order-3 form —
-    including its fan-out floor, the CASE-guard + outer-explode
-    filter-pushdown discipline, and the ``keep_empty`` placeholder-row
-    contract for scorers; see that docstring)."""
-    ws = f"filter(split({text_col}, ' '), w -> w <> '')"
-    exploded = (
-        fan_out(docs.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.expr(ws).alias("_ws"))
-        .select(
-            F.col(id_col),
-            F.expr(f"transform(_ws, w -> {_dsir_bucket_spark('w', buckets)})"
-                   ).alias("_bs"),
-        )
-        .select(
-            F.col(id_col),
-            F.expr(
-                "CASE WHEN size(_bs) >= 3 THEN "
-                "transform(sequence(1, size(_bs) - 2), "
-                "i -> struct(element_at(_bs, i) AS u, "
-                "element_at(_bs, i + 1) AS v, "
-                "element_at(_bs, i + 2) AS w)) "
-                "ELSE array() END").alias("_tga"),
-        )
-        .select(F.col(id_col), F.explode_outer("_tga").alias("_tg"))
-    )
-    if not keep_empty:
-        exploded = exploded.filter(F.col("_tg").isNotNull())
-    return exploded.select(F.col(id_col), F.col("_tg.u").alias("u"),
-                           F.col("_tg.v").alias("v"),
-                           F.col("_tg.w").alias("w"))
-
-
-def sbo_model(train_docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", buckets: int = 4096) -> DataFrame:
-    """The trigram LM artifact: the ``(u, v, w, c3)`` trigram histogram
-    over the reference corpus, checkpointed once. EVERY backoff marginal
-    (bigram context A(u,v), backoff gram B2(v,w), backoff context C1(v),
-    unigram D(w), total T) DERIVES from this one frame — one training
-    pass over the corpus, the lm_model stance at order 3."""
-    return (
-        _lm_trigrams(train_docs, text_col, id_col, buckets)
-        .groupBy("u", "v", "w")
-        .agg(F.count("*").cast("long").alias("c3"))
-        .localCheckpoint(eager=False)
-    )
-
-
-def sbo_perplexity(docs: DataFrame, train_where: str,
-                   text_col: str = "text", id_col: str = "doc_id",
-                   buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """Trigram LM fluency with STUPID BACKOFF (Brants et al. 2007, "Large
-    Language Models in Machine Translation" — the web-scale smoothing
-    that replaced Kneser-Ney at MapReduce scale, built for exactly this
-    distributed setting): score each document's trigrams at the deepest
-    level with evidence, backing off with factor alpha = 0.4 per level:
-
-        S(w | u,v) = N3(u,v,w) / A(u,v)              if N3 > 0
-                   = 0.4 * B2(v,w) / C1(v)           elif B2 > 0
-                   = 0.16 * (D(w) + 1) / (T + B)     otherwise (add-1)
-
-    where every marginal derives from the trigram histogram (A = sum
-    over w, B2 = sum over u, C1 = sum over u,w, D = sum over u,v, T =
-    total — a DECLARED surrogate: true bigram counts differ at document
-    edges, but the derived marginals keep the model one training pass
-    and the hierarchy consistent). alpha = 2/5 is RATIONAL, so the
-    per-trigram scaled inverse score is exact integer arithmetic at
-    every level (the lm_perplexity stance):
-
-        term = scale * A div N3                          (level 3)
-             = (5 * scale * C1) div (2 * B2)             (level 2)
-             = (25 * scale * (T + B)) div (4 * (D + 1))  (level 1)
-
-    Output one row per input doc: ``(id, n_trigrams, n_hits3, n_hits2,
-    sum_invp, sbo_permille)`` — the per-level hit counts make the
-    backoff structure itself checkable; NULL sbo for docs with < 3
-    tokens.
-
-    Scale: one training featurize into the checkpointed trigram
-    histogram; A and B2 are <= occupied-pair tables joined on two int
-    keys (AQE broadcast-or-skew-split, the lm_score stance), C1/D/T
-    broadcast (<= buckets rows / 1 row); the corpus side is the
-    (id, u, v, w) int frame reduced by doc id — text never shuffles."""
-    model = sbo_model(docs.filter(train_where), text_col, id_col, buckets)
-    return sbo_score(docs, model, text_col=text_col, id_col=id_col,
-                     buckets=buckets, scale=scale)
-
-
-def sbo_score(docs: DataFrame, model: DataFrame, *,
-              text_col: str = "text", id_col: str = "doc_id",
-              buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """Serving half of :func:`sbo_perplexity` (per-doc independent —
-    streamable through the stream_lm_gate pattern).
-
-    Plan shape (r12, the lm_score stance): the featurize keeps the
-    placeholder row for < 3-token docs so the doc-id reduce emits one
-    row per input doc itself — no stitch-back join. The small backoff
-    marginals DERIVE from the larger ones (C1 = Σ_w A, D = Σ_v B2,
-    T = Σ C1) instead of each re-aggregating the full trigram
-    histogram: three of the five marginal aggregations now run over
-    the (much smaller) marginal frames — at scale the histogram is
-    corpus-bounded while A/B2 are type-bounded."""
-    tg = _lm_trigrams(docs, text_col, id_col, buckets, keep_empty=True)
-    a_ctx = model.groupBy("u", "v").agg(
-        F.sum("c3").cast("long").alias("a_uv")).localCheckpoint(eager=False)
-    b2 = model.groupBy("v", "w").agg(
-        F.sum("c3").cast("long").alias("b_vw")).localCheckpoint(eager=False)
-    c1 = a_ctx.groupBy("v").agg(F.sum("a_uv").cast("long").alias("c_v"))
-    d1 = b2.groupBy("w").agg(F.sum("b_vw").cast("long").alias("d_w"))
-    tot = c1.agg(F.sum("c_v").cast("long").alias("t_all"))
-    return (
-        tg
-        .join(model, ["u", "v", "w"], "left")
-        .join(a_ctx, ["u", "v"], "left")
-        .join(b2, ["v", "w"], "left")
-        .join(F.broadcast(c1), ["v"], "left")
-        .join(F.broadcast(d1), ["w"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col(id_col),
-            F.col("u"),
-            F.expr("if(coalesce(c3, 0L) > 0, 1L, 0L)").alias("_h3"),
-            F.expr("if(coalesce(c3, 0L) = 0 and coalesce(b_vw, 0L) > 0,"
-                   " 1L, 0L)").alias("_h2"),
-            F.expr(
-                f"CASE WHEN u IS NULL THEN CAST(NULL AS BIGINT)"
-                f" WHEN coalesce(c3, 0L) > 0"
-                f" THEN ({scale} * a_uv) div c3"
-                f" WHEN coalesce(b_vw, 0L) > 0"
-                f" THEN (5 * {scale} * c_v) div (2 * b_vw)"
-                f" ELSE (25 * {scale} * (t_all + {buckets}))"
-                f" div (4 * (coalesce(d_w, 0L) + 1)) END"
-            ).alias("_invp"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.count("u").cast("long").alias("n_trigrams"),
-            F.sum("_h3").cast("long").alias("n_hits3"),
-            F.sum("_h2").cast("long").alias("n_hits2"),
-            F.coalesce(F.sum("_invp"), F.lit(0)).cast("long")
-            .alias("sum_invp"),
-        )
-        .withColumn(
-            "sbo_permille",
-            F.expr("CASE WHEN n_trigrams > 0 THEN sum_invp div n_trigrams "
-                   "ELSE CAST(NULL AS BIGINT) END"),
-        )
-    )
-
-
-def sbo_gate_oracle_sql(train_where: str, table: str = "documents",
-                        id_col: str = "doc_id", buckets: int = 4096,
-                        scale: int = 1000) -> str:
-    """Oracle for the trigram-LM keep rule (batch or streamed through
-    stream_lm_gate(order=3)): every scored doc with ``sbo <= t2``, the
-    exact middle/tail tertile cut — the lm_gate oracle at order 3, with
-    the full sbo oracle embedded as the scores subquery."""
-    inner = sbo_perplexity_oracle_sql(train_where, table, id_col,
-                                      buckets, scale)
-    return f"""
-WITH s AS (SELECT * FROM ({inner})),
-h AS (
-  SELECT sbo_permille AS p, count(*)::BIGINT AS cnt
-  FROM s WHERE sbo_permille IS NOT NULL GROUP BY sbo_permille
-),
-cum AS (SELECT p, sum(cnt) OVER (ORDER BY p)::BIGINT AS c FROM h),
-cuts AS (
-  SELECT min(CASE WHEN c >= greatest(1, CAST(ceil(2.0 * _n / 3.0)
-                                             AS BIGINT)) THEN p END) AS t2
-  FROM cum CROSS JOIN (SELECT max(c) AS _n FROM cum)
-)
-SELECT {id_col}, n_trigrams, n_hits3, n_hits2, sum_invp, sbo_permille
-FROM s CROSS JOIN cuts
-WHERE sbo_permille <= t2 ORDER BY {id_col}"""
-
-
-def sbo_perplexity_oracle_sql(train_where: str, table: str = "documents",
-                              id_col: str = "doc_id",
-                              buckets: int = 4096,
-                              scale: int = 1000) -> str:
-    """DuckDB recomputation of :func:`sbo_perplexity`."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
-    return f"""
-WITH t_all_docs AS (
-  SELECT {id_col}, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {id_col}, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 3
-),
-tg_all AS (
-  SELECT {id_col},
-         unnest(list_transform(range(1, len(bs) - 1), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs) - 1), i -> bs[i + 1])) AS v,
-         unnest(list_transform(range(1, len(bs) - 1), i -> bs[i + 2])) AS w
-  FROM t_all_docs
-),
-t_tr_docs AS (
-  SELECT list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {ws} AS ws FROM {table} WHERE {train_where})
-  WHERE len(ws) >= 3
-),
-tg_tr AS (
-  SELECT unnest(list_transform(range(1, len(bs) - 1), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs) - 1), i -> bs[i + 1])) AS v,
-         unnest(list_transform(range(1, len(bs) - 1), i -> bs[i + 2])) AS w
-  FROM t_tr_docs
-),
-n3 AS (SELECT u, v, w, count(*)::BIGINT AS c3 FROM tg_tr GROUP BY u, v, w),
-actx AS (SELECT u, v, sum(c3)::BIGINT AS a_uv FROM n3 GROUP BY u, v),
-b2 AS (SELECT v, w, sum(c3)::BIGINT AS b_vw FROM n3 GROUP BY v, w),
-c1 AS (SELECT v, sum(c3)::BIGINT AS c_v FROM n3 GROUP BY v),
-d1 AS (SELECT w, sum(c3)::BIGINT AS d_w FROM n3 GROUP BY w),
-tt AS (SELECT sum(c3)::BIGINT AS t_all FROM n3),
-per AS (
-  SELECT {id_col}, count(*)::BIGINT AS n_trigrams,
-         sum(CASE WHEN coalesce(c3, 0) > 0 THEN 1 ELSE 0 END)::BIGINT
-           AS n_hits3,
-         sum(CASE WHEN coalesce(c3, 0) = 0 AND coalesce(b_vw, 0) > 0
-                  THEN 1 ELSE 0 END)::BIGINT AS n_hits2,
-         sum(CASE WHEN coalesce(c3, 0) > 0
-                  THEN ({scale} * a_uv) // c3
-                  WHEN coalesce(b_vw, 0) > 0
-                  THEN (5 * {scale} * c_v) // (2 * b_vw)
-                  ELSE (25 * {scale} * (t_all + {buckets}))
-                       // (4 * (coalesce(d_w, 0) + 1)) END)::BIGINT
-           AS sum_invp
-  FROM tg_all
-  LEFT JOIN n3 USING (u, v, w)
-  LEFT JOIN actx USING (u, v)
-  LEFT JOIN b2 USING (v, w)
-  LEFT JOIN c1 USING (v)
-  LEFT JOIN d1 USING (w)
-  CROSS JOIN tt
-  GROUP BY {id_col}
-)
-SELECT d.{id_col}, coalesce(n_trigrams, 0)::BIGINT AS n_trigrams,
-       coalesce(n_hits3, 0)::BIGINT AS n_hits3,
-       coalesce(n_hits2, 0)::BIGINT AS n_hits2,
-       coalesce(sum_invp, 0)::BIGINT AS sum_invp,
-       (CASE WHEN coalesce(n_trigrams, 0) > 0
-             THEN sum_invp // n_trigrams END)::BIGINT AS sbo_permille
-FROM {table} d LEFT JOIN per USING ({id_col})
-ORDER BY d.{id_col}
-"""
 
 
 def lm_domain_matrix(docs: DataFrame, *, domain_col: str = "lang",
@@ -2389,16 +2494,13 @@ def lm_domain_matrix(docs: DataFrame, *, domain_col: str = "lang",
     The diagonal is each domain's self-perplexity (always the row
     minimum for well-separated domains — pinned in pytest).
 
-    Scale: ONE bigram featurize of the whole corpus into a per-domain
-    pair histogram (``(dom, u, v, cnt)`` — map-side combined, text
-    never shuffles), checkpointed once; the matrix is a histogram ×
-    histogram join on the two int bucket keys (each side bounded by
-    |domains| * occupied-pairs — dictionary-sized, NEVER the corpus)
-    followed by a <= |domains|^2 aggregate. The corpus is read once."""
-    bg = _lm_bigrams(docs.select(F.col(domain_col).alias("_dom"),
-                                 F.col(text_col), F.lit(0).alias(id_col)),
-                     text_col, "_dom", buckets)
-    # one histogram per domain: (dom, u, v, cnt)
+    Scale: the corpus is read once, into a checkpointed per-domain pair
+    histogram ``(dom, u, v, cnt)``; the matrix is a histogram × histogram
+    join on the int keys (|domains| * occupied-pairs, NEVER the corpus)
+    followed by a <= |domains|^2 aggregate."""
+    bg = _ngrams(docs.select(F.col(domain_col).alias("_dom"),
+                             F.col(text_col), F.lit(0).alias(id_col)),
+                 2, text_col, "_dom", buckets)
     hist = (
         bg.groupBy(F.col("_dom"), "u", "v")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -2406,39 +2508,56 @@ def lm_domain_matrix(docs: DataFrame, *, domain_col: str = "lang",
     )
     model_ctx = hist.groupBy(F.col("_dom").alias("_m"), "u").agg(
         F.sum("cnt").cast("long").alias("c_u"))
-    model_pair = hist.select(
-        F.col("_dom").alias("_m"), "u", "v",
-        F.col("cnt").alias("c_uv"))
+    model_pair = hist.select(F.col("_dom").alias("_m"), "u", "v",
+                             F.col("cnt").alias("c_uv"))
     data = hist.select(F.col("_dom").alias("_d"), "u", "v", "cnt")
     # the matrix is TOTAL over domain pairs: replicate the data
     # histogram once per model domain (a <= |domains|-row broadcast),
     # then LEFT join the model tables — a data bucket the model never
     # saw scores the add-1 floor, it must not drop the pair
     doms = F.broadcast(hist.select(F.col("_dom").alias("_m")).distinct())
+    invp = _ADD1_INVP.format(buckets=buckets, scale=scale)
     return (
         data
         .crossJoin(doms)
         .join(model_ctx, ["_m", "u"], "left")
         .join(model_pair, ["_m", "u", "v"], "left")
-        .select(
-            "_m", "_d",
-            F.col("cnt"),
-            F.expr(
-                f"cnt * (((coalesce(c_u, 0L) + {buckets}) * {scale})"
-                " div (coalesce(c_uv, 0L) + 1))"
-            ).alias("_mass"),
-        )
+        .select("_m", "_d", F.col("cnt"),
+                F.expr(f"cnt * ({invp})").alias("_mass"))
         .groupBy(F.col("_m").alias("model_domain"),
                  F.col("_d").alias("data_domain"))
-        .agg(
-            F.sum("cnt").cast("long").alias("n_bigrams"),
-            F.sum("_mass").cast("long").alias("sum_invp"),
-        )
-        .withColumn(
-            "cross_permille",
-            F.expr("sum_invp div n_bigrams"))
+        .agg(F.sum("cnt").cast("long").alias("n_bigrams"),
+             F.sum("_mass").cast("long").alias("sum_invp"))
+        .withColumn("cross_permille", F.expr("sum_invp div n_bigrams"))
         .orderBy("model_domain", "data_domain")
     )
+
+
+def _lm_matrix_duck_ctes(domain_col: str, table: str, buckets: int,
+                         scale: int, doms_where: str) -> list[str]:
+    """DuckDB CTEs ending in ``mat(m, dd, n_bigrams, sum_invp,
+    cross_permille)``: :func:`lm_domain_matrix` over the model domains
+    kept by ``doms_where`` (a filter on ``dom``)."""
+    invp = _ADD1.duck_invp.format(buckets=buckets, scale=scale)
+    return [
+        _duck_ngrams("bg", f"{domain_col} AS dom, ", table, "TRUE", 2,
+                     buckets),
+        "hist AS MATERIALIZED (SELECT dom, u, v, count(*)::BIGINT AS cnt "
+        "FROM bg GROUP BY dom, u, v)",
+        "mctx AS MATERIALIZED (SELECT dom AS m, u, sum(cnt)::BIGINT AS c_u "
+        "FROM hist GROUP BY dom, u)",
+        "mpair AS MATERIALIZED (SELECT dom AS m, u, v, cnt AS c_uv FROM hist)",
+        f"doms AS MATERIALIZED (SELECT DISTINCT dom AS m FROM hist "
+        f"WHERE {doms_where})", f"""mat AS MATERIALIZED (
+  SELECT m, d.dom AS dd, sum(d.cnt)::BIGINT AS n_bigrams,
+         sum(d.cnt * ({invp}))::BIGINT AS sum_invp,
+         (sum(d.cnt * ({invp})) // sum(d.cnt))::BIGINT AS cross_permille
+  FROM hist d
+  CROSS JOIN doms
+  LEFT JOIN mctx USING (m, u)
+  LEFT JOIN mpair USING (m, u, v)
+  GROUP BY m, d.dom
+)"""]
 
 
 def lm_domain_matrix_oracle_sql(*, domain_col: str = "lang",
@@ -2446,40 +2565,11 @@ def lm_domain_matrix_oracle_sql(*, domain_col: str = "lang",
                                 buckets: int = 4096,
                                 scale: int = 1000) -> str:
     """DuckDB recomputation of :func:`lm_domain_matrix`."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
-    return f"""
-WITH b AS (
-  SELECT dom, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {domain_col} AS dom, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 2
-),
-bg AS (
-  SELECT dom,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b
-),
-hist AS (SELECT dom, u, v, count(*)::BIGINT AS cnt
-         FROM bg GROUP BY dom, u, v),
-mctx AS (SELECT dom AS m, u, sum(cnt)::BIGINT AS c_u
-         FROM hist GROUP BY dom, u),
-mpair AS (SELECT dom AS m, u, v, cnt AS c_uv FROM hist),
-doms AS (SELECT DISTINCT dom AS m FROM hist)
-SELECT m AS model_domain, d.dom AS data_domain,
-       sum(d.cnt)::BIGINT AS n_bigrams,
-       sum(d.cnt * (((coalesce(c_u, 0) + {buckets}) * {scale})
-                    // (coalesce(c_uv, 0) + 1)))::BIGINT AS sum_invp,
-       (sum(d.cnt * (((coalesce(c_u, 0) + {buckets}) * {scale})
-                     // (coalesce(c_uv, 0) + 1)))
-        // sum(d.cnt))::BIGINT AS cross_permille
-FROM hist d
-CROSS JOIN doms
-LEFT JOIN mctx USING (m, u)
-LEFT JOIN mpair USING (m, u, v)
-GROUP BY m, d.dom
-ORDER BY model_domain, data_domain
-"""
+    ctes = _lm_matrix_duck_ctes(domain_col, table, buckets, scale, "TRUE")
+    return ("WITH " + ",\n".join(ctes) + """
+SELECT m AS model_domain, dd AS data_domain, n_bigrams, sum_invp,
+       cross_permille
+FROM mat ORDER BY model_domain, data_domain""")
 
 
 def doremi_weights(docs: DataFrame, *, domain_col: str = "lang",
@@ -2581,8 +2671,6 @@ def doremi_weights_oracle_sql(*, domain_col: str = "lang",
     oracle construction). All arithmetic is non-negative integers, so
     DuckDB's truncating ``//`` equals Python's floor ``//`` on the
     Spark side."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
     smooth_b = smooth_den - smooth_num
     unrolled = []
     prev = "w0"
@@ -2606,47 +2694,20 @@ w{t} AS MATERIALIZED (
         prev = f"w{t}"
     avg = " + ".join(f"(SELECT w FROM w{t} WHERE w{t}.dom = ex.dom)"
                      for t in range(1, iters + 1))
-    return f"""
-WITH b AS (
-  SELECT dom, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {domain_col} AS dom, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 2
-),
-bg AS (
-  SELECT dom,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b
-),
-hist AS MATERIALIZED (SELECT dom, u, v, count(*)::BIGINT AS cnt
-         FROM bg GROUP BY dom, u, v),
-mctx AS MATERIALIZED (SELECT dom AS m, u, sum(cnt)::BIGINT AS c_u
-         FROM hist GROUP BY dom, u),
-mpair AS MATERIALIZED (SELECT dom AS m, u, v, cnt AS c_uv FROM hist),
--- the MIXTURE excludes NULL domains on both engines (unlabeled data
--- cannot be weight-targeted; the NULL model row is a join-floor
--- artifact) — mirrors the Python side's `if r.model_domain is not None`
-doms AS MATERIALIZED (SELECT DISTINCT dom AS m FROM hist
-                      WHERE dom IS NOT NULL),
-mat AS MATERIALIZED (
-  SELECT m, d.dom AS dd,
-         (sum(d.cnt * (((coalesce(c_u, 0) + {buckets}) * {scale})
-                       // (coalesce(c_uv, 0) + 1)))
-          // sum(d.cnt))::BIGINT AS cp
-  FROM hist d
-  CROSS JOIN doms
-  LEFT JOIN mctx USING (m, u)
-  LEFT JOIN mpair USING (m, u, v)
-  GROUP BY m, d.dom
-),
+    # the MIXTURE excludes NULL domains on both engines (unlabeled data
+    # cannot be weight-targeted; the NULL model row is a join-floor
+    # artifact) — mirrors the Python side's `if r.model_domain is not None`
+    ctes = _lm_matrix_duck_ctes(domain_col, table, buckets, scale,
+                                "dom IS NOT NULL")
+    return "WITH " + ",\n".join(ctes) + f""",
 nd AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM doms),
 ex AS MATERIALIZED (
   SELECT dd AS dom,
          CASE WHEN (SELECT n FROM nd) = 1 THEN 0
               ELSE greatest(0::HUGEINT,
-                   (sum(CASE WHEN m <> dd THEN cp ELSE 0 END)
+                   (sum(CASE WHEN m <> dd THEN cross_permille ELSE 0 END)
                     // greatest(1, (SELECT n FROM nd) - 1))
-                   - max(CASE WHEN m = dd THEN cp END))
+                   - max(CASE WHEN m = dd THEN cross_permille END))
          END::BIGINT AS excess
   FROM mat WHERE dd IS NOT NULL GROUP BY dd
 ),
@@ -2846,383 +2907,6 @@ ORDER BY t.{domain_col}
 """
 
 
-def kn_perplexity(docs: DataFrame, train_where: str,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """Interpolated Kneser-Ney fluency scoring (Chen & Goodman 1999 —
-    the empirically-best classical n-gram smoothing, and the one KenLM
-    serves; public method): train on the ``train_where`` subset, score
-    every document. Completes the engine's smoothing canon: add-1
-    (lm_perplexity, CCNet's shape), stupid backoff (sbo_perplexity,
-    Brants et al.), and now KN — the three named baselines of the
-    n-gram LM literature, all over the SAME checkpointed histogram
-    artifact and all integer-exact.
-
-    KN's two ideas survive the integer-rational translation intact
-    because absolute discounting is RATIONAL: with discount D = 3/4,
-
-        p(v|u) = max(c(u,v) - 3/4, 0)/c(u)
-                 + (3/4) * N1+(u.)/c(u) * N1+(.v)/T
-
-    over common denominator 4*c(u)*T (T = distinct bigram types,
-    N1+(u.) = distinct continuations of u, N1+(.v) = distinct contexts
-    of v — the continuation count, KN's signature). The score is the
-    engine's standard inverse-probability surrogate: per bigram,
-
-        inv = least( (4*c(u)*T*scale) div max(num, 1), cap )
-        num = T*max(4*c(u,v) - 3, 0) + 3*N1+(u.)*N1+(.v)
-
-    with an unseen CONTEXT falling back to the pure continuation
-    distribution ``inv = (T*scale) div max(N1+(.v), 1)`` and
-    ``cap = 4*(T + buckets)*scale`` bounding the never-seen-anywhere
-    token at the uniform-over-types floor (one unknown word cannot
-    dominate a document mean). Every operation is +,*,max,min and ONE
-    truncating division on non-negative ints — Spark ``div`` == DuckDB
-    ``//``, hash-exact. Output: ``(id, n_bigrams, sum_invp,
-    kn_permille)``, NULL kn for docs with < 2 tokens.
-
-    Scale: same plan as lm_score — one training featurize into the
-    checkpointed pair histogram, ALL of ctx/continuation/type-count
-    marginals derived from it (never a second corpus pass), one
-    two-int-key join + doc-id reduce over the corpus; text never
-    shuffles. int64 discipline: 4*c(u)*T*scale must stay under 2^63 —
-    c(u) <= 1.4e8 at the default buckets/scale; past that drop
-    ``scale`` or promote to decimal(38,0) (lm_score's documented
-    boundary, one term earlier)."""
-    model = lm_model(docs.filter(train_where), text_col, id_col, buckets)
-    return kn_score(docs, model, text_col=text_col, id_col=id_col,
-                    buckets=buckets, scale=scale)
-
-
-def kn_score(docs: DataFrame, model: DataFrame, *,
-             text_col: str = "text", id_col: str = "doc_id",
-             buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """Score ``docs`` against a trained :func:`lm_model` histogram with
-    interpolated Kneser-Ney — the serving half of
-    :func:`kn_perplexity` (lm_score's contract: one row per input doc,
-    per-doc independent, NULL for the unscorable; r12 plan shape: the
-    keep_empty placeholder row replaces the stitch-back join, see
-    lm_score)."""
-    bg_all = _lm_bigrams(docs, text_col, id_col, buckets, keep_empty=True)
-    ctx = model.groupBy("u").agg(
-        F.sum("c_uv").cast("long").alias("c_u"),
-        F.count("*").cast("long").alias("n1f"),
-    )
-    bwd = model.groupBy("v").agg(F.count("*").cast("long").alias("n1b"))
-    tt = model.agg(F.count("*").cast("long").alias("t_types"))
-    inv = (
-        "CASE WHEN u IS NULL THEN CAST(NULL AS BIGINT) ELSE least("
-        " CASE WHEN c_u IS NOT NULL THEN"
-        f"  (4L * c_u * t_types * {scale}) div greatest("
-        "    t_types * greatest(4L * coalesce(c_uv, 0L) - 3L, 0L)"
-        "    + 3L * n1f * coalesce(n1b, 0L), 1L)"
-        f" ELSE (t_types * {scale}) div greatest(coalesce(n1b, 0L), 1L)"
-        " END,"
-        f" 4L * (t_types + {buckets}) * {scale}) END"
-    )
-    return (
-        bg_all
-        .join(model, ["u", "v"], "left")
-        .join(F.broadcast(ctx), ["u"], "left")
-        .join(F.broadcast(bwd), ["v"], "left")
-        .join(F.broadcast(tt))
-        .select(F.col(id_col), F.col("u"), F.expr(inv).alias("_invp"))
-        .groupBy(id_col)
-        .agg(
-            F.count("u").cast("long").alias("n_bigrams"),
-            F.coalesce(F.sum("_invp"), F.lit(0)).cast("long")
-            .alias("sum_invp"),
-        )
-        .withColumn(
-            "kn_permille",
-            F.expr("CASE WHEN n_bigrams > 0 THEN sum_invp div n_bigrams "
-                   "ELSE CAST(NULL AS BIGINT) END"),
-        )
-    )
-
-
-def kn_perplexity_oracle_sql(train_where: str, table: str = "documents",
-                             id_col: str = "doc_id",
-                             buckets: int = 4096,
-                             scale: int = 1000) -> str:
-    """DuckDB recomputation of :func:`kn_perplexity` — the lm oracle's
-    CTE chain with KN's derived marginals (continuation counts + type
-    total) and the same capped inverse-probability expression."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
-    inv = (
-        "least("
-        " CASE WHEN c_u IS NOT NULL THEN"
-        f"  (4 * c_u::HUGEINT * t_types * {scale}) // greatest("
-        "    t_types::HUGEINT * greatest(4 * coalesce(c_uv, 0) - 3, 0)"
-        "    + 3 * n1f::HUGEINT * coalesce(n1b, 0), 1)"
-        f" ELSE (t_types::HUGEINT * {scale})"
-        "  // greatest(coalesce(n1b, 0), 1)"
-        " END,"
-        f" 4 * (t_types::HUGEINT + {buckets}) * {scale})"
-    )
-    return f"""
-WITH b_all AS MATERIALIZED (
-  SELECT {id_col}, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {id_col}, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 2
-),
-bg_all AS MATERIALIZED (
-  SELECT {id_col},
-         unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_all
-),
-b_tr AS MATERIALIZED (
-  SELECT list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {ws} AS ws FROM {table} WHERE {train_where})
-  WHERE len(ws) >= 2
-),
-bg_tr AS MATERIALIZED (
-  SELECT unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_tr
-),
-ph AS MATERIALIZED (SELECT u, v, count(*)::BIGINT AS c_uv
-                    FROM bg_tr GROUP BY u, v),
-ch AS MATERIALIZED (SELECT u, sum(c_uv)::BIGINT AS c_u,
-                           count(*)::BIGINT AS n1f
-                    FROM ph GROUP BY u),
-bh AS MATERIALIZED (SELECT v, count(*)::BIGINT AS n1b FROM ph GROUP BY v),
-tt AS MATERIALIZED (SELECT count(*)::BIGINT AS t_types FROM ph),
-per AS MATERIALIZED (
-  SELECT {id_col}, count(*)::BIGINT AS n_bigrams,
-         sum({inv})::BIGINT AS sum_invp
-  FROM bg_all
-  LEFT JOIN ph USING (u, v)
-  LEFT JOIN ch USING (u)
-  LEFT JOIN bh USING (v)
-  CROSS JOIN tt
-  GROUP BY {id_col}
-)
-SELECT d.{id_col}, coalesce(n_bigrams, 0)::BIGINT AS n_bigrams,
-       coalesce(sum_invp, 0)::BIGINT AS sum_invp,
-       (CASE WHEN coalesce(n_bigrams, 0) > 0
-             THEN sum_invp // n_bigrams END)::BIGINT AS kn_permille
-FROM {table} d LEFT JOIN per USING ({id_col})
-ORDER BY d.{id_col}
-"""
-
-
-def mkn_perplexity(docs: DataFrame, train_where: str,
-                   text_col: str = "text", id_col: str = "doc_id",
-                   buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """MODIFIED Kneser-Ney fluency scoring (Chen & Goodman 1999 §3;
-    public method) — the literature's production variant and KenLM's
-    actual default: instead of :func:`kn_perplexity`'s single fixed
-    discount, three DATA-DERIVED discounts D1/D2/D3+ apply to bigrams
-    seen once / twice / three-plus times, each estimated from the
-    model's count-of-count statistics n1..n4 (number of bigram types
-    with count exactly 1..4):
-
-        Y  = n1 / (n1 + 2 n2)
-        D1 = 1 - 2 Y n2 / n1 = Y          D2 = 2 - 3 Y n3 / n2
-        D3 = 3 - 4 Y n4 / n3              (each clamped at >= 0)
-
-    The discounts are RATIONAL in integer count-of-counts, but their
-    exact common denominator (n2 n3 (n1 + 2 n2)) overflows int64 when
-    multiplied through the score, so they are QUANTIZED once onto a
-    fixed /1024 grid with the engine's truncating division (Spark
-    ``div`` == DuckDB ``//``, hash-exact both sides):
-
-        d1 = (1024 n1) div (n1 + 2 n2)          [= 1024 Y]
-        d2 = max(0, 2048 - (3072 n1 n3) div (n2 (n1 + 2 n2)))
-        d3 = max(0, 3072 - (4096 n1 n4) div (n3 (n1 + 2 n2)))
-
-    — the same integer-surrogate discipline as the rest of the scoring
-    canon (scores are already /1000 permilles); the discounts stay
-    data-derived, only their last two bits are grid noise. With
-    per-context continuation-type counts N1(u)/N2(u)/N3+(u) (number of
-    v with c(u,v) = 1 / = 2 / >= 3), the interpolation weight is
-    gamma(u) = (d1 N1 + d2 N2 + d3 N3+)/(1024 c(u)) — mKN's
-    leave-one-out mass — and per bigram
-
-        num = T (1024 c(u,v) - d(c(u,v)))_+ + (d1 N1 + d2 N2 + d3 N3+) N1+(.v)
-        inv = least( (1024 c(u) T scale) div max(num, 1), cap )
-
-    with the unseen-context fallback and cap exactly as KN
-    (``cap = 1024 (T + buckets) scale``). Output
-    ``(id, n_bigrams, sum_invp, mkn_permille)``; NULL for < 2 tokens.
-
-    Scale: identical plan to kn_score — the count-of-counts and
-    discounts are ONE extra 1-row aggregate over the same checkpointed
-    histogram (broadcast with the type total), the context aggregate
-    gains two integer columns; still one two-int-key join + doc-id
-    reduce, text never shuffles. int64 discipline: 1024 c(u) T scale
-    must stay under 2^63 — c(u) T <= 9e12 at scale=1000, e.g. c(u) <=
-    1e6 against T <= 9e6 types; past that drop ``scale`` (kn_score's
-    documented boundary, 8 bits earlier)."""
-    model = lm_model(docs.filter(train_where), text_col, id_col, buckets)
-    return mkn_score(docs, model, text_col=text_col, id_col=id_col,
-                     buckets=buckets, scale=scale)
-
-
-def mkn_score(docs: DataFrame, model: DataFrame, *,
-              text_col: str = "text", id_col: str = "doc_id",
-              buckets: int = 4096, scale: int = 1000) -> DataFrame:
-    """Score ``docs`` against a trained :func:`lm_model` histogram with
-    modified Kneser-Ney — the serving half of :func:`mkn_perplexity`
-    (lm_score's contract: one row per input doc, NULL when unscorable;
-    r12 plan shape: the keep_empty placeholder row replaces the
-    stitch-back join, see lm_score)."""
-    bg_all = _lm_bigrams(docs, text_col, id_col, buckets, keep_empty=True)
-    ctx = model.groupBy("u").agg(
-        F.sum("c_uv").cast("long").alias("c_u"),
-        F.sum(F.when(F.col("c_uv") == 1, 1).otherwise(0))
-        .cast("long").alias("n1u"),
-        F.sum(F.when(F.col("c_uv") == 2, 1).otherwise(0))
-        .cast("long").alias("n2u"),
-        F.sum(F.when(F.col("c_uv") >= 3, 1).otherwise(0))
-        .cast("long").alias("n3u"),
-    )
-    bwd = model.groupBy("v").agg(F.count("*").cast("long").alias("n1b"))
-    # count-of-counts n1..n4 + type total, then the three quantized
-    # discounts — ONE 1-row frame broadcast into the scoring join
-    disc = (
-        model.agg(
-            F.count("*").cast("long").alias("t_types"),
-            *[F.sum(F.when(F.col("c_uv") == i, 1).otherwise(0))
-              .cast("long").alias(f"n{i}") for i in (1, 2, 3, 4)],
-        )
-        .select(
-            "t_types",
-            F.expr("(1024L * n1) div greatest(n1 + 2L * n2, 1L)")
-            .alias("d1"),
-            F.expr("greatest(0L, 2048L - (3072L * n1 * n3) div "
-                   "greatest(n2 * (n1 + 2L * n2), 1L))").alias("d2"),
-            F.expr("greatest(0L, 3072L - (4096L * n1 * n4) div "
-                   "greatest(n3 * (n1 + 2L * n2), 1L))").alias("d3"),
-        )
-    )
-    inv = (
-        "CASE WHEN u IS NULL THEN CAST(NULL AS BIGINT) ELSE least("
-        " CASE WHEN c_u IS NOT NULL THEN"
-        f"  (1024L * c_u * t_types * {scale}) div greatest("
-        "    t_types * greatest(1024L * coalesce(c_uv, 0L)"
-        "      - CASE WHEN coalesce(c_uv, 0L) = 1 THEN d1"
-        "             WHEN c_uv = 2 THEN d2"
-        "             WHEN c_uv >= 3 THEN d3 ELSE 0L END, 0L)"
-        "    + (d1 * n1u + d2 * n2u + d3 * n3u) * coalesce(n1b, 0L), 1L)"
-        f" ELSE (t_types * {scale}) div greatest(coalesce(n1b, 0L), 1L)"
-        " END,"
-        f" 1024L * (t_types + {buckets}) * {scale}) END"
-    )
-    return (
-        bg_all
-        .join(model, ["u", "v"], "left")
-        .join(F.broadcast(ctx), ["u"], "left")
-        .join(F.broadcast(bwd), ["v"], "left")
-        .join(F.broadcast(disc))
-        .select(F.col(id_col), F.col("u"), F.expr(inv).alias("_invp"))
-        .groupBy(id_col)
-        .agg(
-            F.count("u").cast("long").alias("n_bigrams"),
-            F.coalesce(F.sum("_invp"), F.lit(0)).cast("long")
-            .alias("sum_invp"),
-        )
-        .withColumn(
-            "mkn_permille",
-            F.expr("CASE WHEN n_bigrams > 0 THEN sum_invp div n_bigrams "
-                   "ELSE CAST(NULL AS BIGINT) END"),
-        )
-    )
-
-
-def mkn_perplexity_oracle_sql(train_where: str, table: str = "documents",
-                              id_col: str = "doc_id",
-                              buckets: int = 4096,
-                              scale: int = 1000) -> str:
-    """DuckDB recomputation of :func:`mkn_perplexity` — the KN oracle's
-    CTE chain with the count-of-count discount derivation and the
-    per-count discount dispatch."""
-    ws = "[w for w in string_split(text, ' ') if w <> '']"
-    bucket = _dsir_bucket_duck("w", buckets)
-    inv = (
-        "least("
-        " CASE WHEN c_u IS NOT NULL THEN"
-        f"  (1024 * c_u::HUGEINT * t_types * {scale}) // greatest("
-        "    t_types::HUGEINT * greatest(1024 * coalesce(c_uv, 0)"
-        "      - CASE WHEN coalesce(c_uv, 0) = 1 THEN d1"
-        "             WHEN c_uv = 2 THEN d2"
-        "             WHEN c_uv >= 3 THEN d3 ELSE 0 END, 0)"
-        "    + (d1::HUGEINT * n1u + d2 * n2u + d3 * n3u)"
-        "      * coalesce(n1b, 0), 1)"
-        f" ELSE (t_types::HUGEINT * {scale})"
-        "  // greatest(coalesce(n1b, 0), 1)"
-        " END,"
-        f" 1024 * (t_types::HUGEINT + {buckets}) * {scale})"
-    )
-    return f"""
-WITH b_all AS MATERIALIZED (
-  SELECT {id_col}, list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {id_col}, {ws} AS ws FROM {table})
-  WHERE len(ws) >= 2
-),
-bg_all AS MATERIALIZED (
-  SELECT {id_col},
-         unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_all
-),
-b_tr AS MATERIALIZED (
-  SELECT list_transform(ws, w -> {bucket}) AS bs
-  FROM (SELECT {ws} AS ws FROM {table} WHERE {train_where})
-  WHERE len(ws) >= 2
-),
-bg_tr AS MATERIALIZED (
-  SELECT unnest(list_transform(range(1, len(bs)), i -> bs[i])) AS u,
-         unnest(list_transform(range(1, len(bs)), i -> bs[i + 1])) AS v
-  FROM b_tr
-),
-ph AS MATERIALIZED (SELECT u, v, count(*)::BIGINT AS c_uv
-                    FROM bg_tr GROUP BY u, v),
-ch AS MATERIALIZED (
-  SELECT u, sum(c_uv)::BIGINT AS c_u,
-         sum(CASE WHEN c_uv = 1 THEN 1 ELSE 0 END)::BIGINT AS n1u,
-         sum(CASE WHEN c_uv = 2 THEN 1 ELSE 0 END)::BIGINT AS n2u,
-         sum(CASE WHEN c_uv >= 3 THEN 1 ELSE 0 END)::BIGINT AS n3u
-  FROM ph GROUP BY u),
-bh AS MATERIALIZED (SELECT v, count(*)::BIGINT AS n1b FROM ph GROUP BY v),
-dsc AS MATERIALIZED (
-  SELECT t_types,
-         ((1024 * n1) // greatest(n1 + 2 * n2, 1))::BIGINT AS d1,
-         greatest(0, 2048 - (3072 * n1::HUGEINT * n3)
-                  // greatest(n2::HUGEINT * (n1 + 2 * n2), 1))::BIGINT
-           AS d2,
-         greatest(0, 3072 - (4096 * n1::HUGEINT * n4)
-                  // greatest(n3::HUGEINT * (n1 + 2 * n2), 1))::BIGINT
-           AS d3
-  FROM (SELECT count(*)::BIGINT AS t_types,
-               sum(CASE WHEN c_uv = 1 THEN 1 ELSE 0 END)::BIGINT AS n1,
-               sum(CASE WHEN c_uv = 2 THEN 1 ELSE 0 END)::BIGINT AS n2,
-               sum(CASE WHEN c_uv = 3 THEN 1 ELSE 0 END)::BIGINT AS n3,
-               sum(CASE WHEN c_uv = 4 THEN 1 ELSE 0 END)::BIGINT AS n4
-        FROM ph)
-),
-per AS MATERIALIZED (
-  SELECT {id_col}, count(*)::BIGINT AS n_bigrams,
-         sum({inv})::BIGINT AS sum_invp
-  FROM bg_all
-  LEFT JOIN ph USING (u, v)
-  LEFT JOIN ch USING (u)
-  LEFT JOIN bh USING (v)
-  CROSS JOIN dsc
-  GROUP BY {id_col}
-)
-SELECT d.{id_col}, coalesce(n_bigrams, 0)::BIGINT AS n_bigrams,
-       coalesce(sum_invp, 0)::BIGINT AS sum_invp,
-       (CASE WHEN coalesce(n_bigrams, 0) > 0
-             THEN sum_invp // n_bigrams END)::BIGINT AS mkn_permille
-FROM {table} d LEFT JOIN per USING ({id_col})
-ORDER BY d.{id_col}
-"""
-
-
 def anneal_mix(docs: DataFrame,
                phases: list[tuple[str, dict[str, int], int]], *,
                weight_scale: int = 1000,
@@ -3379,38 +3063,6 @@ SELECT g.phase, g.dom AS {domain_col}, g.n_avail, g.w AS weight,
        coalesce(k.sum_kept_ids, 0)::BIGINT AS sum_kept_ids
 FROM tgt g LEFT JOIN kept k ON g.phase = k.phase AND g.dom = k.dom
 ORDER BY g.phase, g.dom
-"""
-
-
-def mkn_gate_oracle_sql(train_where: str, table: str = "documents",
-                        id_col: str = "doc_id", buckets: int = 4096,
-                        scale: int = 1000) -> str:
-    """Oracle for the modified-KN keep rule (batch or streamed —
-    streaming.stream_lm_gate's ``smoothing="mkn"`` survivor set is
-    identical by per-doc independence): every scored doc with
-    ``mkn_permille <= t2``, the exact middle/tail tertile cut —
-    :func:`lm_gate_oracle_sql`'s shape over the mKN score chain."""
-    inner = mkn_perplexity_oracle_sql(train_where, table, id_col,
-                                      buckets, scale)
-    return f"""
-WITH scores AS MATERIALIZED (
-{inner}
-),
-h AS (
-  SELECT mkn_permille AS p, count(*)::BIGINT AS cnt
-  FROM scores WHERE mkn_permille IS NOT NULL GROUP BY mkn_permille
-),
-cum AS (
-  SELECT p, sum(cnt) OVER (ORDER BY p)::BIGINT AS c FROM h
-),
-cuts AS (
-  SELECT min(CASE WHEN c >= greatest(1, CAST(ceil(2.0 * _n / 3.0)
-                                             AS BIGINT)) THEN p END) AS t2
-  FROM cum CROSS JOIN (SELECT max(c) AS _n FROM cum)
-)
-SELECT {id_col}, n_bigrams, sum_invp, mkn_permille
-FROM scores CROSS JOIN cuts
-WHERE mkn_permille <= t2 ORDER BY {id_col}
 """
 
 

@@ -341,8 +341,7 @@ def stream_ivf_ingest(emb_stream: DataFrame, path: str,
 
 def stream_lm_gate(docs_stream: DataFrame, model: DataFrame,
                    out_path: str, checkpoint_dir: str, *,
-                   threshold: int, order: int = 2,
-                   smoothing: str | None = None,
+                   threshold: int, smoothing: str = "add1",
                    buckets: int = 4096,
                    scale: int = 1000, text_col: str = "text",
                    id_col: str = "doc_id") -> None:
@@ -376,43 +375,27 @@ def stream_lm_gate(docs_stream: DataFrame, model: DataFrame,
     partition column — drop or ignore it; it is the idempotence key,
     not data.
 
-    ``order``/``smoothing`` select the LM. Defaults preserve the
-    original dispatch: order 2 scores with curate.lm_score (add-1,
-    column ``ppl_permille``) and order 3 with curate.sbo_score (stupid
-    backoff, ``sbo_permille``). ``smoothing`` overrides the bigram
-    scorer within order 2 — ``"kn"`` (curate.kn_score,
-    ``kn_permille``) or ``"mkn"`` (curate.mkn_score,
-    ``mkn_permille``) — completing the smoothing canon's batch/stream
-    symmetry over the SAME curate.lm_model histogram artifact; the
-    model frame must match the order either way."""
-    from cassandra_ttl_remover_spark.operators.curate import (
-        kn_score,
-        lm_score,
-        mkn_score,
-        sbo_score,
-    )
+    ``smoothing`` names the scheme in curate.LM_SCHEMES, which fixes
+    the n-gram order and the score column: ``"add1"`` (curate.lm_score,
+    ``ppl_permille``), ``"kn"`` (curate.kn_score, ``kn_permille``) and
+    ``"mkn"`` (curate.mkn_score, ``mkn_permille``) score against the
+    bigram curate.lm_model histogram; ``"sbo"`` (curate.sbo_score,
+    stupid backoff, ``sbo_permille``) against the trigram
+    curate.sbo_model one. ``model`` must be the histogram its scheme
+    trains; an unknown name raises ValueError."""
+    from cassandra_ttl_remover_spark.operators.curate import LM_SCHEMES
 
-    if smoothing is None:
-        smoothing = "add1" if order == 2 else "sbo"
-    dispatch = {
-        (2, "add1"): (lm_score, "ppl_permille"),
-        (2, "kn"): (kn_score, "kn_permille"),
-        (2, "mkn"): (mkn_score, "mkn_permille"),
-        (3, "sbo"): (sbo_score, "sbo_permille"),
-    }
-    if (order, smoothing) not in dispatch:
-        raise ValueError(
-            f"unsupported (order, smoothing) = ({order}, {smoothing!r}); "
-            f"supported: {sorted(dispatch)}")
-    scorer, score_col = dispatch[(order, smoothing)]
+    if smoothing not in LM_SCHEMES:
+        raise ValueError(f"unsupported smoothing {smoothing!r}; "
+                         f"supported: {sorted(LM_SCHEMES)}")
+    scheme = LM_SCHEMES[smoothing]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         (
-            scorer(batch_df, model, text_col=text_col, id_col=id_col,
-                   buckets=buckets, scale=scale)
-            .filter(F.col(score_col) <= threshold)
+            scheme.score(batch_df, model, text_col, id_col, buckets, scale)
+            .filter(F.col(scheme.out) <= threshold)
             .write.mode("overwrite").parquet(f"{out_path}/b={batch_id}")
         )
 

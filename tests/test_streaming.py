@@ -564,7 +564,7 @@ def test_stream_lm_gate_matches_batch_keep_set(spark, tmp_path):
 
 def test_stream_lm_gate_order3_matches_batch(spark, tmp_path):
     """The trigram (stupid-backoff) edition of the streaming gate: same
-    per-doc-independence argument, order=3 path."""
+    per-doc-independence argument, smoothing="sbo" path."""
     from cassandra_ttl_remover_spark import scan_table
     from cassandra_ttl_remover_spark.operators.curate import (
         lm_tertile_cuts,
@@ -585,7 +585,7 @@ def test_stream_lm_gate_order3_matches_batch(spark, tmp_path):
     out = str(tmp_path / "kept")
     stream_lm_gate(
         scan_stream(spark, sf, glob="documents.parquet"), model,
-        out, str(tmp_path / "ckpt"), threshold=t2, order=3)
+        out, str(tmp_path / "ckpt"), threshold=t2, smoothing="sbo")
     got = sorted((r.doc_id, r.sum_invp, r.sbo_permille)
                  for r in spark.read.parquet(out).collect())
     want = sorted((r.doc_id, r.sum_invp, r.sbo_permille)
@@ -671,7 +671,4 @@ def test_stream_lm_gate_rejects_bad_dispatch(spark):
     )
 
     with _pytest.raises(ValueError, match="unsupported"):
-        stream_lm_gate(None, None, "x", "y", threshold=0,
-                       order=3, smoothing="mkn")
-    with _pytest.raises(ValueError, match="unsupported"):
-        stream_lm_gate(None, None, "x", "y", threshold=0, order=4)
+        stream_lm_gate(None, None, "x", "y", threshold=0, smoothing="wb")
