@@ -119,21 +119,9 @@ def gated_exact_dedup(spark: SparkSession, docs: DataFrame, *,
         id_col,
         keep_cols=[text_col, "quality"],
     )
-    # The gate applies as a Generate guard (explode of a 0/1-element
-    # array), not a filter: a filter referencing the projected
-    # quality/pred_lang columns gets SUBSTITUTED through the projections
-    # and sinks below the window stage, so the whole battery evaluated
-    # TWICE (once in the sunk filter, once in the surviving projection) —
-    # ABAB r13: 1.203 -> 0.642 s for the prefix with the guard. A
-    # Generate cannot sink, so the battery is computed once, above it.
-    keep0 = (
-        scored.select(id_col, text_col, "pred_lang", "quality")
-        .withColumn("_g", F.explode(F.expr(
-            f"CASE WHEN quality >= {min_quality} AND pred_lang IN "
-            f"({', '.join(repr(lang) for lang in langs)}) "
-            "THEN array(1) ELSE array() END")))
-        .drop("_g")
-    )
+    keep0 = _gate_guard(
+        scored.select(id_col, text_col, "pred_lang", "quality"),
+        min_quality, langs)
     # Stage boundary: materialize the exact-deduped survivors once.
     # Downstream consumes keep1 from several branches (the shingle
     # inverted-index join alone reads it twice); without materialization
@@ -141,6 +129,27 @@ def gated_exact_dedup(spark: SparkSession, docs: DataFrame, *,
     # is a write to storage between pipeline stages; locally
     # localCheckpoint gives the same cut with lineage truncation.
     return keep0.localCheckpoint(eager=False)
+
+
+def _gate_guard(scored: DataFrame, min_quality: float,
+                langs: tuple[str, ...]) -> DataFrame:
+    """The rows of ``scored`` with ``quality >= min_quality`` and
+    ``pred_lang`` in ``langs``, kept by a Generate guard (explode of a
+    0/1-element array), not a filter: a filter referencing the projected
+    quality/pred_lang columns gets SUBSTITUTED through the projections
+    and sinks below the window stage, so the whole battery evaluated
+    TWICE (once in the sunk filter, once in the surviving projection) —
+    ABAB r13: 1.203 -> 0.642 s for the prefix with the guard. A Generate
+    cannot sink, so the battery is computed once, above it. The
+    condition is built with the Column API: user values reach the plan
+    as literals, never as SQL text."""
+    keep = (F.col("quality") >= min_quality) & F.col("pred_lang").isin(*langs)
+    return (
+        scored
+        .withColumn("_g", F.explode(
+            F.when(keep, F.array(F.lit(1))).otherwise(F.array())))
+        .drop("_g")
+    )
 
 
 def curate_lsh_invariants(spark: SparkSession, docs: DataFrame, *,

@@ -35,6 +35,16 @@ def test_curate_lsh_path_runs_and_filters(spark, documents):
     assert kept.filter(F.col("quality") < 0.5).count() == 0
 
 
+def test_gate_guard_matches_language_values_exactly(spark):
+    # the language list reaches the plan as literals, not SQL text: a
+    # control character must match itself and nothing else
+    scored = spark.createDataFrame(
+        [("\x01", 0.9), ("x01", 0.9), ("\x01", 0.1)],
+        "pred_lang string, quality double")
+    kept = curate._gate_guard(scored, 0.5, ("\x01",)).collect()
+    assert [tuple(r) for r in kept] == [("\x01", 0.9)]
+
+
 def test_decontaminate_flags_overlap(spark, documents):
     bench = documents.filter(F.col("doc_id") % 50 == 0)
     out = curate.decontaminate(documents, bench).cache()
