@@ -2939,25 +2939,6 @@ def events_sstable_update_fixture(spark, sf_dir: str, out_dir: str) -> None:
     write_sstable(parts.items(), out_dir)
 
 
-def sstable_compact_cells_oracle_sql(table: str = "events") -> str:
-    """The UNION of both generations' cells as the compaction input frame
-    ``(pk, cell, writetime, is_tombstone)`` — base generation from
-    :func:`sstable_scan_oracle_sql`'s rules, update generation from
-    :func:`events_sstable_update_fixture`'s."""
-    return f"""
-SELECT pk, cell, writetime, kind = 'tombstone' AS is_tombstone
-FROM ({sstable_scan_oracle_sql(table)})
-UNION ALL
-SELECT user_id::VARCHAR, printf('%012d', event_id) || ':etype',
-       epoch_us(ts) + 1000000, FALSE
-FROM {table} WHERE event_id % 5 = 0
-UNION ALL
-SELECT user_id::VARCHAR, printf('%012d', event_id) || ':props',
-       epoch_us(ts) + 2000000, TRUE
-FROM {table} WHERE event_id % 19 = 0
-"""
-
-
 def events_sstable_update_fixture_v2(spark, sf_dir: str,
                                      out_dir: str) -> None:
     """Generation 2 over :func:`events_sstable_fixture_v2`'s table — the
