@@ -643,7 +643,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #: contract test pins these to the front of the graded window.
 _REGRADE_FIRST = [
     # one n-gram LM scoring kernel for the four smoothing schemes, its
-    # shared oracle CTE builders, and stream_lm_gate's name dispatch:
+    # shared oracle CTE helpers, and stream_lm_gate's name dispatch:
     "q_n68_lm_perplexity",
     "q_n69_lm_ppl_buckets",
     "q_n70_lm_domain_report",

@@ -1573,9 +1573,9 @@ def _dsir_features(docs: DataFrame, text_col: str, id_col: str,
     before the projection and exploded in the OUTER form (filter on the
     generated column) so neither a parallelism floor of 1 nor an
     inferred size()>0 filter pushed below the exchange serializes the
-    md5 chain onto the scan task — the _lm_bigrams discipline.
+    md5 chain onto the scan task — the _ngrams discipline.
     ``keep_empty=True`` keeps the outer-explode placeholder row (bucket
-    NULL) for featureless docs — the _lm_bigrams scorer contract."""
+    NULL) for featureless docs — the _ngrams scorer contract."""
     ws = f"filter(split({text_col}, ' '), w -> w <> '')"
     bigrams = (
         "CASE WHEN size(_ws) >= 2 THEN "
