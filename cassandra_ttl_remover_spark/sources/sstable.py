@@ -43,7 +43,13 @@ Scale design: the PLANNER reads only ``Index.db`` (one small sequential
 pass) and cuts the key space into contiguous ``Data.db`` byte ranges; each
 Spark task seeks to its range start and decodes forward — no task ever
 reads another split's bytes, so the scan parallelizes like any columnar
-split scan and would map 1:1 onto object-store ranged GETs. Cells stream
+split scan and would map 1:1 onto object-store ranged GETs. Split size
+follows Spark's file-split rule by default (``spark.sql.files.
+maxPartitionBytes`` capped, ``openCostInBytes`` floored, total bytes over
+``defaultParallelism`` otherwise), so a few MB of input is one split per
+table and one wave of Python tasks, while a large table is cut into
+byte-sized splits; ``scan_sstable(num_splits=N)`` still pins N splits per
+table. Cells stream
 out as flat rows; no partition is materialized whole except the one being
 decoded (the reference's iterator does the same —
 NoTTLSSTableIdentityIterator). The WRITER here is the deterministic
@@ -1668,15 +1674,25 @@ def _exact_key(key_start: bytes | None,
     return None
 
 
-def _plan_table_splits(table_dir: str, num_splits: int,
+def _plan_table_splits(table_dir: str, num_splits: int | None,
                        key_start: bytes | None = None,
-                       key_stop: bytes | None = None) -> list[tuple]:
+                       key_stop: bytes | None = None,
+                       split_bytes: int | None = None) -> list[tuple]:
     """Shared split planner: contiguous index-snapped byte ranges of one
     sstable directory as ``(data_path, start, end)`` triples — used by
     both the batch reader and the per-shard streaming micro-batches.
     A KEYED plan on a table with a Summary.db parses only the covering
     index window (the reference's summary-then-index probe order); full
-    scans and summary-less tables read the whole index."""
+    scans and summary-less tables read the whole index.
+
+    Sizing: ``num_splits`` cuts the selected index run into at most that
+    many runs of equal partition count. Given ``split_bytes`` instead
+    (``num_splits=None``), the run of ``b`` bytes becomes
+    ``ceil(b / split_bytes)`` splits (at least one, at most one per
+    partition), each cut snapped back to the start of the partition
+    holding its byte target."""
+    import bisect
+
     data_path = os.path.join(table_dir, "Data.db")
     samples = (_read_summary(table_dir)
                if key_start is not None or key_stop is not None else None)
@@ -1694,16 +1710,19 @@ def _plan_table_splits(table_dir: str, num_splits: int,
     hi = lo + 1
     while hi < len(entries) and entries[hi][1] < byte_end:
         hi += 1
-    selected = entries[lo:hi]
-    n = min(num_splits, len(selected))
-    per = (len(selected) + n - 1) // n
-    out = []
-    for s in range(0, len(selected), per):
-        start = selected[s][1]
-        end = (selected[s + per][1] if s + per < len(selected)
-               else byte_end)
-        out.append((data_path, start, end))
-    return out
+    offsets = [off for _, off in entries[lo:hi]]
+    if num_splits is None:
+        run = byte_end - byte_start
+        n = min(len(offsets), max(1, -(-run // split_bytes)))
+        firsts = sorted({
+            bisect.bisect_right(offsets, byte_start + i * run // n) - 1
+            for i in range(n)
+        })
+    else:
+        n = min(num_splits, len(offsets))
+        firsts = range(0, len(offsets), -(-len(offsets) // n))
+    bounds = [offsets[s] for s in firsts] + [byte_end]
+    return [(data_path, a, b) for a, b in zip(bounds, bounds[1:])]
 
 
 def _make_datasource_cls():
@@ -1727,7 +1746,12 @@ def _make_datasource_cls():
             self.path = options.get("path")
             if not self.path:
                 raise ValueError("sstable_simple requires option 'path'")
-            self.num_splits = int(options.get("num_splits", "8"))
+            # split sizing: ``split_bytes`` (what scan_sstable derives
+            # from the session) or a per-table ``num_splits`` (default 8)
+            sb = options.get("split_bytes")
+            self.split_bytes = int(sb) if sb is not None else None
+            self.num_splits = (int(options.get("num_splits", "8"))
+                               if sb is None else None)
             ks = options.get("key_start")
             kp = options.get("key_stop")
             self.key_start = ks.encode("utf-8") if ks is not None else None
@@ -1842,7 +1866,8 @@ def _make_datasource_cls():
                 _Split(*t)
                 for table in tables
                 for t in _plan_table_splits(table, self.num_splits,
-                                            self.key_start, self.key_stop)
+                                            self.key_start, self.key_stop,
+                                            self.split_bytes)
             ]
             return splits or [_Split(os.path.join(self._table_dirs()[0],
                                                   "Data.db"), 0, 0)]
@@ -2017,20 +2042,42 @@ def register_sstable_source(spark) -> None:
         spark.dataSource.register(cls)
 
 
-def scan_sstable(spark, path: str, num_splits: int = 8,
+def _session_split_bytes(spark, path: str) -> int:
+    """The byte size one scan split aims at: Spark's own file-split rule
+    (``FilePartition.maxSplitBytes``) over the tables' Data.db bytes,
+    ``min(maxPartitionBytes, max(openCostInBytes, total /
+    defaultParallelism))`` — the settings that already size the engine's
+    parquet scans, read from ``spark``'s session conf."""
+    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    total = sum(_data_size(d) for d in _resolve_table_dirs(path))
+    per_core = total // spark.sparkContext.defaultParallelism
+    return min(conf.filesMaxPartitionBytes(),
+               max(conf.filesOpenCostInBytes(), per_core))
+
+
+def scan_sstable(spark, path: str, num_splits: int | None = None,
                  key_start: str | None = None,
                  key_stop: str | None = None):
     """Parallel scan of a simple-cell SSTable directory into flat cell
     rows. ``key_start``/``key_stop`` (byte-order half-open range over the
     partition key) push pruning into the PLANNER via the index — the S3/S4
     scan semantics on the binary format: only the selected partitions'
-    Data.db bytes are ever read."""
+    Data.db bytes are ever read.
+
+    Split sizing: ``num_splits`` cuts every table into at most that many
+    index-snapped splits. Left ``None``, splits are sized by BYTES on
+    the driver (:func:`_session_split_bytes`, the same rule and settings
+    as a parquet scan): a table's selected run of ``b`` bytes becomes
+    ``ceil(b / target)`` splits. Each split is one Python task, and a
+    Python task carries a fixed start-up cost far above the decode of a
+    few MB, so small inputs get one split per table instead of a fixed
+    count that would queue several waves of near-empty tasks."""
     register_sstable_source(spark)
-    r = (
-        spark.read.format("sstable_simple")
-        .option("path", path)
-        .option("num_splits", str(num_splits))
-    )
+    r = spark.read.format("sstable_simple").option("path", path)
+    if num_splits is None:
+        r = r.option("split_bytes", str(_session_split_bytes(spark, path)))
+    else:
+        r = r.option("num_splits", str(num_splits))
     if key_start is not None:
         r = r.option("key_start", key_start)
     if key_stop is not None:

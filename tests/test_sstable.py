@@ -72,6 +72,64 @@ def test_splits_snap_to_partition_starts_and_cover_all(spark):
     shutil.rmtree(out)
 
 
+def test_default_splits_are_sized_by_bytes(spark):
+    """Without ``num_splits`` the scan sizes splits by Spark's file-split
+    rule over Data.db bytes: two small tables plan one split each; under
+    a small ``maxPartitionBytes`` a table is cut into
+    ``ceil(bytes / target)`` index-snapped splits and never into more
+    than one per partition; rows equal a fixed 8-per-table scan's, and
+    a pk point lookup still plans one partition's bytes."""
+    from pyspark.sql import functions as F
+
+    base = _tmpdir()
+    sizes = {}
+    for t, n in (("t1", 40), ("t2", 25)):
+        d = os.path.join(base, t)
+        ss.write_sstable([(f"{t}k{i:04d}".encode(),
+                           [(b"c", 0, 0, 0, i, b"v" * 50)])
+                          for i in range(n)], d)
+        sizes[t] = ss._data_size(d)
+    t1 = os.path.join(base, "t1")
+    offsets = [off for _, off in ss.read_index(os.path.join(t1, "Index.db"))]
+    want = sorted(tuple(r) for r in
+                  ss.scan_sstable(spark, base, num_splits=8).collect())
+
+    df = ss.scan_sstable(spark, base)
+    assert df.rdd.getNumPartitions() == 2
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+    small = 1000
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(small))
+    try:
+        assert ss._session_split_bytes(spark, base) == small
+        splits = ss._plan_table_splits(t1, None, split_bytes=small)
+        assert len(splits) == -(-sizes["t1"] // small) > 2
+        assert all(s in offsets for _, s, _ in splits)
+        assert splits[0][1] == 0 and splits[-1][2] == sizes["t1"]
+        assert all(a[2] == b[1] for a, b in zip(splits, splits[1:]))
+        df = ss.scan_sstable(spark, base)
+        assert df.rdd.getNumPartitions() == sum(
+            -(-b // small) for b in sizes.values())
+        assert sorted(tuple(r) for r in df.collect()) == want
+
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        assert len(ss._plan_table_splits(t1, None, split_bytes=1)) == 40
+        assert ss.scan_sstable(spark, base).rdd.getNumPartitions() == 65
+
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        key = b"t1k0007"
+        (split,) = ss._plan_table_splits(
+            t1, None, key, key + b"\x00",
+            split_bytes=ss._session_split_bytes(spark, base))
+        assert split[1:] == (offsets[7], offsets[8])
+        hit = ss.scan_sstable(spark, base).filter(F.col("pk") == "t1k0007")
+        assert hit.rdd.getNumPartitions() == 1
+        assert [r.writetime for r in hit.collect()] == [7]
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        shutil.rmtree(base)
+
+
 def test_unsupported_mask_and_partition_deletion_fail_loud(spark):
     out = _tmpdir()
     ss.write_sstable(
