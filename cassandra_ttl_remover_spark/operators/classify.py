@@ -49,9 +49,10 @@ from cassandra_ttl_remover_spark.operators.curate import (
 from cassandra_ttl_remover_spark.plans import checkpoint_partitioned, fan_out
 
 #: tf-idf weight quantum (2**14). w = ((tf*Q div dl) * (N+1)) div (df+1)
-#: keeps w <= Q*(N+1)/2 (df >= 1 whenever the bucket exists), so dot
-#: products and norms stay int64 for corpora up to ~10**7 docs; beyond
-#: that rescale the idf numerator (w grows linearly with N).
+#: keeps w <= Q*(N+1)/2 (df >= 1 whenever the bucket exists). w grows
+#: linearly with N, so a squared norm can pass 2**63 from ~3.7*10**5 docs
+#: on (a one-word document alone in its bucket); beyond that rescale the
+#: idf numerator. text_knn checks its query norm against the int64 range.
 TFIDF_Q = 1 << 14
 
 #: Rocchio class-sum shift: class sums are re-quantized ``s div 2**14``
@@ -228,7 +229,17 @@ def text_knn(docs: DataFrame, query_id, k: int = 20, dim: int = 1024,
     and the fused aggregate halves the corpus passes (ABAB r13:
     1.372 -> 1.205 s warm at sf0.1). ``dot > 0`` reproduces the old
     inner bucket join's row set exactly — weights are strictly positive,
-    so a shared bucket implies a positive dot."""
+    so a shared bucket implies a positive dot.
+
+    Eager: the call itself runs a Spark job. The weight frame's
+    checkpoint materializes and the query vector is collected to the
+    driver before the frame is returned; only the join, aggregate and
+    top-``k`` stay lazy.
+
+    Range: the query's squared norm must fit int64 (a ``ValueError``
+    names it otherwise). A corpus norm beyond int64 fails the aggregate
+    under ANSI overflow checks, and by Cauchy-Schwarz ``dot`` never
+    exceeds the larger of the two norms."""
     from cassandra_ttl_remover_spark.plans import local_frame
 
     w = hashed_tfidf(docs, dim, text_col, id_col).select(
@@ -237,6 +248,11 @@ def text_knn(docs: DataFrame, query_id, k: int = 20, dim: int = 1024,
     q_rows = w.filter(F.col(id_col) == F.lit(query_id)) \
         .select("bucket", "w").collect()
     qn2 = sum(int(r["w"]) ** 2 for r in q_rows)
+    if qn2 >= 1 << 63:
+        raise ValueError(
+            f"text_knn: query document {query_id!r} has squared tf-idf "
+            f"norm {qn2}, beyond the int64 range of the exact scorer; "
+            f"the corpus is too large for TFIDF_Q = {TFIDF_Q}")
     types = {f.name: f.dataType.simpleString() for f in w.schema.fields}
     qv = F.broadcast(local_frame(
         docs.sparkSession,

@@ -90,6 +90,16 @@ def test_text_knn_self_is_rank_one_and_duplicates_tie(spark):
     assert all(r.doc_id != 4 for r in rows)  # no shared bucket -> no row
 
 
+def test_text_knn_query_norm_beyond_int64_raises(spark, monkeypatch):
+    # two buckets of weight 2**32: each fits int64, their squared sum
+    # (2**65) does not
+    w = spark.createDataFrame([(1, 0, 1 << 32), (1, 1, 1 << 32),
+                               (2, 0, 1)], "doc_id long, bucket int, w long")
+    monkeypatch.setattr(C, "hashed_tfidf", lambda *a: w)
+    with pytest.raises(ValueError, match="beyond the int64 range"):
+        C.text_knn(_toy_docs(spark, [(1, "a", "en")]), 1)
+
+
 def test_text_knn_plan_broadcasts_query_and_stats(spark, documents):
     df = C.text_knn(documents, 0, k=10, dim=512)
     plan = formatted_plan(df)
