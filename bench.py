@@ -663,6 +663,9 @@ def main() -> int:
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in load_after],
         "cpus": os.cpu_count(),
+        # the core count the session ran on (session.get_spark's rule)
+        "spark_graft_cpus": int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or os.cpu_count()),
     }))
     return 0
 
